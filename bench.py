@@ -474,6 +474,7 @@ def main() -> None:
     # otherwise the headline measures the correctness harness.
     from pyspark.sql import functions as F
 
+    from pippin_spark import entry_queries as EQ
     from pippin_spark.operators import dedup as DEDUP
     from pippin_spark.operators import similarity as SIM
     from pippin_spark.pipeline import Pipeline
@@ -565,10 +566,6 @@ def main() -> None:
         # the stream-side ingest gate alone (signature UDF -> stateless
         # stream-static join -> drain); the declared query additionally
         # recomputes the batch ground truth for its equality oracle
-        import tempfile
-
-        from pyspark.sql import functions as F
-
         docs = Pipeline.from_table(spark, sf_dir, "documents").df
         corpus = docs.filter(F.col("doc_id") % 10 < 8)
         store = DEDUP.text_minhash_signatures(
@@ -598,120 +595,18 @@ def main() -> None:
             .outputMode("append")
             .trigger(availableNow=True)
             .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="bench_ckpt_minhash_"),
+                "checkpointLocation", EQ._stream_ckpt("bench_ckpt_minhash_")
             )
             .start()
         )
-        q.awaitTermination(120)
+        EQ._drain(q)
         return spark.table("bench_stream_minhash").distinct()
 
-    def _raw_maintain(spark, sf_dir):
-        # the PRODUCT maintain cycle a training pipeline repeats: base
-        # build (layout='cells', full IVF-PQ since r10: codebooks +
-        # per-vector codes + qerr ledger) + streamed foreachBatch
-        # append (PQ-encodes against the stored codebooks) + hot-cell
-        # compaction + BOTH drift gates (centroid + PQ codebook) +
-        # probe. The declared query additionally rebuilds a second
-        # FULL index (the fresh verification arm) and runs the
-        # equality joins + file-snapshot invariants — that's the
-        # correctness harness, and timing it would roughly double the
-        # row (the sketch-query rule).
-        from pyspark.sql import functions as F
-
-        from pippin_spark.entry_queries import (
-            _maint_index_path,
-            _stream_ckpt,
-            _drain,
-        )
-
-        emb = Pipeline.from_table(spark, sf_dir, "embeddings").df
-        base = emb.filter(F.col("vec_id") % 10 < 8)
-        path = _maint_index_path(sf_dir) + "_benchraw"
-        SIM.ann_index_write(
-            base, "embedding", "vec_id", path, num_cells=16,
-            train_iters=3, layout="cells", pq=(8, 16, 2),
-        )
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("pathGlobFilter", "embeddings.parquet")
-            .parquet(sf_dir)
-            .filter(F.col("vec_id") % 10 >= 8)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda b, _e: SIM.ann_index_append(
-                    b.sparkSession, path, b, "embedding", "vec_id"
-                )
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _stream_ckpt("bench_ckpt_maint_"))
-            .start()
-        )
-        _drain(q)
-        SIM.ann_index_compact(spark, path)
-        drift = SIM.ann_index_drift(spark, path)
-        pq_drift = SIM.ann_index_pq_drift(spark, path)
-        probe = SIM.ivf_topk_prebuilt(
-            spark, path, emb.filter(F.col("vec_id") < 5), "embedding",
-            "vec_id", k=5, nprobe=4,
-        )
-        return (
-            probe.join(
-                F.broadcast(drift.agg(F.max("drift").alias("max_drift")))
-            ).join(F.broadcast(pq_drift.select("err_ratio")))
-        )
-
-    def _raw_retrain(spark, sf_dir):
-        # the PRODUCT retrain cycle (the PQ drift gate's maintenance
-        # action): base IVF-PQ build on the clustered rig + shifted
-        # flood append + both gates + codebook retrain/re-encode +
-        # post-retrain in-distribution append + gate re-read + probe.
-        # The declared query additionally rebuilds a fresh
-        # verification arm and runs the equality joins — correctness
-        # harness, excluded from the timed row (the maintain rule).
-        from pyspark.sql import functions as F
-
-        from pippin_spark.entry_queries import (
-            _clustered_embeddings,
-            _maint_index_path,
-            _retrain_shift_flood,
-        )
-
-        emb_ids = Pipeline.from_table(spark, sf_dir, "embeddings").df
-        base = _clustered_embeddings(emb_ids, salt=1)
-        path = _maint_index_path(sf_dir) + "_retrain_benchraw"
-        SIM.ann_index_write(
-            base, "embedding", "vec_id", path, num_cells=8,
-            train_iters=3, layout="cells", pq=(8, 16, 2),
-        )
-        flood = _retrain_shift_flood(spark, path)
-        SIM.ann_index_append(spark, path, flood, "embedding", "vec_id")
-        SIM.ann_index_pq_drift(spark, path).collect()
-        SIM.ann_index_drift(spark, path).agg(F.max("drift")).collect()
-        SIM.ann_index_retrain_codebooks(spark, path, train_iters=2)
-        SIM.ann_index_append(
-            spark, path,
-            _clustered_embeddings(
-                emb_ids.filter(F.col("vec_id") % 10 >= 8), salt=3,
-                id_offset=20_000_000,
-            ),
-            "embedding", "vec_id",
-        )
-        probe = SIM.ivfpq_topk_prebuilt(
-            spark, path,
-            _clustered_embeddings(emb_ids.filter(F.col("vec_id") < 5), salt=1),
-            "embedding", "vec_id", k=5, nprobe=4,
-        )
-        return probe.join(
-            F.broadcast(
-                SIM.ann_index_pq_drift(spark, path).select("err_ratio")
-            )
-        )
-
     qs = dict(qs)
-    qs["ann_index_maintain_e2e"] = _raw_maintain
-    qs["ann_index_retrain_e2e"] = _raw_retrain
+    # the product maintenance cycles: the declared queries' steps
+    # without their verification (rebuild arm, recounts, snapshots)
+    qs["ann_index_maintain_e2e"] = EQ._maintain_cycle
+    qs["ann_index_retrain_e2e"] = EQ._retrain_cycle
     qs["dedup_minhash"] = _raw_minhash
     qs["streaming_minhash_dedup"] = _raw_stream_minhash
     qs["dedup_simhash"] = _raw_simhash
@@ -785,10 +680,11 @@ def main() -> None:
         "streaming_ivf_cell_route",  # drains the stream in the builder
         "training_manifest_e2e",  # waterfill fold + budget collect at construction
         # full maintain cycle (base build + streamed append + compact
-        # + fresh-arm rebuild + drift) runs in the builder
+        # + both gates + both probes) runs in the builder
         "ann_index_maintain_e2e",
         # full retrain cycle (base build + flood append + both gates +
-        # codebook retrain/re-encode + post append) runs in the builder
+        # codebook retrain/re-encode + post append + both probes) runs
+        # in the builder
         "ann_index_retrain_e2e",
         # BPE merge training (one 1-row action per round) + budget
         # collect + waterfill fold all run at construction

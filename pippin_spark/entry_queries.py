@@ -16,6 +16,7 @@ Determinism policy (drives every pair):
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -12053,85 +12054,44 @@ def q_streaming_ivf_cell_route(spark, sf_dir):
     )
 
 
-def _maint_index_path(sf_dir: str) -> str:
-    # the MAINTAINED index family (layout='cells'): separate from the
-    # flat probe-only families; mtime-keyed like _ann_index_path so a
-    # regenerated fixture can never serve a stale index
-    import os
+@contextmanager
+def _private_dir():
+    """A fresh directory for one invocation's index artifacts, removed
+    on exit: concurrent or repeated runs never share an index path, and
+    a rerun never appends to a previous run's index."""
+    import shutil
+    import tempfile
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    mt = int(os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet")))
-    return f"/tmp/pippin_maint_ivf_{base}_{mt}"
+    path = tempfile.mkdtemp(prefix="pippin_maint_ivf_")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
-# The maintenance rows' probe-equality arms compare FOUR probe results
-# that are each #queries·k rows (5 queries × k=5 here — the probe
-# workload is a bounded query set, never the corpus). The all-JVM
-# compare (full_outer join on the 4 result columns + two counts)
-# re-executes each lazy probe subtree 2-3×; collecting each probe ONCE
-# and set-comparing on the driver computes the identical mismatch
-# count from one execution per probe (guide §1.2: don't re-run what
-# you already computed; §5: a #queries·k collect is a bounded driver
-# artifact). False keeps the all-JVM compare — the equality pin
-# test_probe_mismatch_driver_matches_join runs both.
-_DRIVER_PROBE_CMP = True
+def _on_helper_thread(spark, fn):
+    """Start ``fn`` on a second driver thread and return its Future.
+    The thread inherits the caller's local properties and job tags, so
+    cancelJobGroup — Pipeline.interrupt() and timeouts — reaches every
+    job it runs."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    pool = ThreadPoolExecutor(max_workers=1)
+    fut = pool.submit(inheritable_thread_target(spark)(fn))
+    pool.shutdown(wait=False)
+    return fut
+
+
+# The maintenance rows compare probe results that are each #queries·k
+# rows (5 queries × k=5: the probe workload is a bounded query set,
+# never the corpus). Each probe is collected ONCE and compared as a
+# driver set (guide §1.2: don't re-run what you already computed; §5:
+# a #queries·k collect is a bounded driver artifact).
+# test_probe_mismatch_driver_matches_join pins the set compare against
+# the all-JVM full_outer-join compare (_n_mismatch_join).
 _PROBE_CMP_COLS = ["query_id", "neighbor_id", "cosine", "rank"]
-
-# guide §2.6 (overlap independent jobs): the from-scratch-rebuild arm
-# of each maintenance row depends ONLY on the row's inputs (corpus /
-# flood fixtures) and its own fresh_path — never on the maintained
-# index — so it runs on a second driver thread while the maintained
-# sequence (stream append, compact, gates, probes: many small
-# scheduling-floor-bound jobs that leave most cores idle) proceeds;
-# Spark's FIFO scheduler back-fills the idle capacity. Results are
-# unchanged: the same jobs run, only their wall-clock overlaps.
-# False = run the arm inline at the point .result() is called (the
-# exact pre-batch sequential order), the A/B baseline.
-_OVERLAP_FRESH_ARM = True
-
-
-def _fresh_arm(fn):
-    """Future for the independent rebuild arm: a real worker thread
-    under _OVERLAP_FRESH_ARM, else a deferred inline call."""
-    if _OVERLAP_FRESH_ARM:
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=1)
-        fut = pool.submit(fn)
-        pool.shutdown(wait=False)
-        return fut
-
-    class _Deferred:
-        def result(self):
-            return fn()
-
-    return _Deferred()
-
-
-# guide §2.6, same rationale as _OVERLAP_FRESH_ARM: once the
-# maintained index is FINAL (no writer left in the row), its tail
-# reads — the assigned recount, the exact-IVF probe, the codes-only
-# IVF-PQ probe, the drift aggregate — are independent scheduling-
-# floor-bound actions; running them from a small pool back-fills the
-# idle cores instead of paying four floors in sequence. False = the
-# sequential A/B baseline.
-_OVERLAP_TAIL = True
-
-# A/B toggle for _clustered_embeddings' pre-generator spread (the
-# guide-§2.5 single-split fix); False = the pre-r12 single-task gen.
-_SPREAD_GEN = True
-
-
-def _tail_reads(*thunks):
-    """Run independent read-only tail actions concurrently (or inline
-    when _OVERLAP_TAIL is False) and return their results in order."""
-    if _OVERLAP_TAIL and len(thunks) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-            futs = [pool.submit(t) for t in thunks]
-            return [f.result() for f in futs]
-    return [t() for t in thunks]
 
 
 def _probe_set(df):
@@ -12142,6 +12102,13 @@ def _probe_set(df):
     return {tuple(r) for r in df.select(*_PROBE_CMP_COLS).collect()}
 
 
+def _n_mismatch(a: set, b: set) -> int:
+    """|a ∪ b| − |a| of two _probe_set results (0 iff every row of
+    ``b`` is in ``a``): the count _n_mismatch_join computes in the
+    JVM."""
+    return len(a | b) - len(a)
+
+
 def _n_mismatch_join(a, b):
     """The all-JVM compare: |a ∪ b| − |a| over the 4-column row
     identity (0 iff the two probe results are row-identical)."""
@@ -12150,6 +12117,136 @@ def _n_mismatch_join(a, b):
         .join(b.select(*_PROBE_CMP_COLS), _PROBE_CMP_COLS, "full_outer")
         .count()
         - a.count()
+    )
+
+
+# The maintenance cycles, written once as ordered steps. Each product
+# cycle (_maintain_cycle, _retrain_cycle: the bench rows) and its
+# declared query run the same steps in the same order; the declared
+# query adds only its verification between them (file-size snapshots,
+# recounts, the from-scratch rebuild arm, probe-set equality).
+
+
+def _ann_probes(spark, path: str, qdf):
+    """The probe step: the exact-IVF and the codes-only IVF-PQ top-5
+    of ``qdf`` against the index at ``path``, each as a _probe_set."""
+    return tuple(
+        _probe_set(
+            probe(spark, path, qdf, "embedding", "vec_id", k=5, nprobe=4)
+        )
+        for probe in (SIM.ivf_topk_prebuilt, SIM.ivfpq_topk_prebuilt)
+    )
+
+
+def _rebuild_arm(spark, path: str, qdf, corpus, **index):
+    """Future of the verification arm's _ann_probes: ``corpus`` written
+    from scratch as a fresh index at ``path``, then probed. It reads
+    only the row's inputs, never the maintained index, so it runs on a
+    helper thread under the whole maintained sequence (guide §2.6:
+    those many small jobs leave most cores idle, and Spark's FIFO
+    scheduler back-fills them)."""
+
+    def run():
+        SIM.ann_index_write(corpus, "embedding", "vec_id", path, **index)
+        return _ann_probes(spark, path, qdf)
+
+    return _on_helper_thread(spark, run)
+
+
+def _max_drift(spark, path: str) -> float:
+    """The centroid rebuild gate: the largest per-cell drift."""
+    return (
+        SIM.ann_index_drift(spark, path)
+        .agg(F.max("drift").alias("d"))
+        .collect()[0]["d"]
+    )
+
+
+def _pq_gate(spark, path: str):
+    """The PQ-codebook rebuild gate's one row (driver-computed from the
+    ledger sidecar, zero Spark jobs)."""
+    return SIM.ann_index_pq_drift(spark, path).collect()[0]
+
+
+def _append_gated(spark, path: str, frame):
+    """Append ``frame`` to the index; return the PQ gate row after it."""
+    SIM.ann_index_append(spark, path, frame, "embedding", "vec_id")
+    return _pq_gate(spark, path)
+
+
+def _cell_file_sizes(path: str) -> dict:
+    """{file: bytes} of a cells-layout index's assigned parquet files."""
+    import glob
+    import os
+
+    return {
+        f: os.path.getsize(f)
+        for f in glob.glob(f"{path}/assigned/cell=*/*.parquet")
+    }
+
+
+# the maintained IVF-PQ index of the maintain cycle (layout='cells':
+# appends land under their target cell dirs, compaction rewrites one
+# hot cell)
+_MAINT_INDEX = dict(num_cells=16, train_iters=3, layout="cells", pq=(8, 16, 2))
+
+
+def _maint_frames(spark, sf_dir):
+    """(embeddings, the 80% base split, the 5-row probe-query frame)."""
+    emb = _t(spark, sf_dir, "embeddings").df
+    return (
+        emb,
+        emb.filter(F.col("vec_id") % 10 < 8),
+        emb.filter(F.col("vec_id") < 5),
+    )
+
+
+def _maint_stream_append(spark, sf_dir, emb, path: str) -> None:
+    """The ingest half: the remaining 20% streamed through foreachBatch
+    into ann_index_append (streaming_ivf_cell_route's assignment driven
+    into the live index)."""
+    stream = (
+        spark.readStream.schema(emb.schema)
+        .option("pathGlobFilter", "embeddings.parquet")
+        .parquet(sf_dir)
+        .filter(F.col("vec_id") % 10 >= 8)
+    )
+    q = (
+        stream.writeStream.foreachBatch(
+            lambda batch, _epoch: SIM.ann_index_append(
+                batch.sparkSession, path, batch, "embedding", "vec_id"
+            )
+        )
+        .trigger(availableNow=True)
+        .option("checkpointLocation", _stream_ckpt("pippin_ckpt_maint_"))
+        .start()
+    )
+    _drain(q)
+
+
+def _maintain_cycle(spark, sf_dir):
+    """The product maintain cycle a training pipeline repeats, without
+    the declared query's verification: base build, streamed append,
+    hot-cell compaction, both rebuild gates, both probes — in a
+    run-private index. Returns the gate outcomes and probe sizes."""
+    emb, base, qdf = _maint_frames(spark, sf_dir)
+    with _private_dir() as d:
+        path = f"{d}/maintained"
+        SIM.ann_index_write(base, "embedding", "vec_id", path, **_MAINT_INDEX)
+        _maint_stream_append(spark, sf_dir, emb, path)
+        SIM.ann_index_compact(spark, path)
+        max_drift, gate = _max_drift(spark, path), _pq_gate(spark, path)
+        sm, smq = _ann_probes(spark, path, qdf)
+    return local_table(
+        spark,
+        [(
+            len(sm),
+            len(smq),
+            int(max_drift < 0.2),
+            int(gate["err_ratio"] < 2.0),
+        )],
+        "probe_pairs long, probe_pairs_pq long, "
+        "drift_below_rebuild_gate long, pq_err_ratio_below_gate long",
     )
 
 
@@ -12188,146 +12285,50 @@ def _n_mismatch_join(a, b):
     """,
 )
 def q_ann_index_maintain_e2e(spark, sf_dir):
-    import glob
-    import os
-    import shutil
-
-    emb = _t(spark, sf_dir, "embeddings").df
-    base = emb.filter(F.col("vec_id") % 10 < 8)
-    path = _maint_index_path(sf_dir)
-    # fresh base build EVERY invocation: repeated runs (bench reps,
-    # driver's two-arm execution) must not double-append — the static
-    # partitioned overwrite wipes any previously appended files
-    SIM.ann_index_write(
-        base, "embedding", "vec_id", path, num_cells=16, train_iters=3,
-        layout="cells", pq=(8, 16, 2),
-    )
-    pre = {
-        f: os.path.getsize(f)
-        for f in glob.glob(f"{path}/assigned/cell=*/*.parquet")
-    }
-    # the from-scratch-rebuild arm depends only on (emb, base,
-    # fresh_path) — kick it off now so it overlaps the whole
-    # maintained sequence below (guide §2.6; _fresh_arm)
-    qdf = emb.filter(F.col("vec_id") < 5)
-    fresh_path = f"{path}_fresharm"
-
-    def _fresh_arm_run():
-        shutil.rmtree(fresh_path, ignore_errors=True)
-        SIM.ann_index_write(
-            emb, "embedding", "vec_id", fresh_path, num_cells=16,
-            train_iters=3, layout="cells", train_on=base,
-            pq=(8, 16, 2), pq_train_on=base,
+    # _maintain_cycle's steps with the verification between them
+    emb, base, qdf = _maint_frames(spark, sf_dir)
+    with _private_dir() as d:
+        path = f"{d}/maintained"
+        SIM.ann_index_write(base, "embedding", "vec_id", path, **_MAINT_INDEX)
+        pre = _cell_file_sizes(path)
+        fresh = _rebuild_arm(
+            spark, f"{d}/rebuilt", qdf, emb, train_on=base,
+            pq_train_on=base, **_MAINT_INDEX,
         )
-        fr = SIM.ivf_topk_prebuilt(
-            spark, fresh_path, qdf, "embedding", "vec_id", k=5, nprobe=4
-        )
-        frq = SIM.ivfpq_topk_prebuilt(
-            spark, fresh_path, qdf, "embedding", "vec_id", k=5, nprobe=4
-        )
-        if _DRIVER_PROBE_CMP:
-            return _probe_set(fr), _probe_set(frq)
-        return fr, frq
-
-    fresh_fut = _fresh_arm(_fresh_arm_run)
-    # ingest half: the streamed 20% routed and APPENDED to the live
-    # index — streaming_ivf_cell_route's assignment driven into
-    # ann_index_append via foreachBatch
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-        .filter(F.col("vec_id") % 10 >= 8)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch, _epoch: SIM.ann_index_append(
-                batch.sparkSession, path, batch, "embedding", "vec_id"
+        # join the arm before the directory goes, on error paths too
+        try:
+            _maint_stream_append(spark, sf_dir, emb, path)
+            post = _cell_file_sizes(path)
+            append_preserved = int(
+                all(post.get(f) == sz for f, sz in pre.items())
+                and len(post) > len(pre)
             )
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _stream_ckpt("pippin_ckpt_maint_"))
-        .start()
-    )
-    _drain(q)
-    post_append = {
-        f: os.path.getsize(f)
-        for f in glob.glob(f"{path}/assigned/cell=*/*.parquet")
-    }
-    append_preserved = int(
-        all(post_append.get(f) == sz for f, sz in pre.items())
-        and len(post_append) > len(pre)
-    )
-    _, assigned = SIM.ann_index_read(spark, path)
-    # one aggregate job for both counts (total + appended-share) —
-    # two .count() actions would scan the assigned table twice
-    cnt = assigned.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(F.col("id") % 10 >= 8, F.lit(1))).alias("na"),
-    ).collect()[0]
-    n_indexed, n_appended = cnt["n"], cnt["na"]
-    rows_before = n_indexed
-    SIM.ann_index_compact(spark, path)
-    _, assigned2 = SIM.ann_index_read(spark, path)
-    # probe equality: maintained index vs from-scratch rebuild on the
-    # augmented corpus against the SAME base-trained centroids; the
-    # codes-only probe must ALSO agree exactly (same base-trained
-    # codebooks on both arms, codes round-trip parquet losslessly).
-    # The compact above was the last writer, so the recount, the two
-    # probes and the drift aggregate are independent tail reads
-    # (_tail_reads, guide §2.6).
-    if _DRIVER_PROBE_CMP:
-        n_after_compact, sm, smq, max_drift = _tail_reads(
-            assigned2.count,
-            lambda: _probe_set(
-                SIM.ivf_topk_prebuilt(
-                    spark, path, qdf, "embedding", "vec_id", k=5, nprobe=4
-                )
-            ),
-            lambda: _probe_set(
-                SIM.ivfpq_topk_prebuilt(
-                    spark, path, qdf, "embedding", "vec_id", k=5, nprobe=4
-                )
-            ),
-            lambda: SIM.ann_index_drift(spark, path)
-            .agg(F.max("drift").alias("d"))
-            .collect()[0]["d"],
-        )
-        compact_preserved = int(n_after_compact == rows_before)
-        sfr, sfq = fresh_fut.result()
-        n_mismatch = len(sm | sfr) - len(sm)
-        n_mismatch_pq = len(smq | sfq) - len(smq)
-        probe_pairs = len(sm)
-    else:
-        compact_preserved = int(assigned2.count() == rows_before)
-        maint = SIM.ivf_topk_prebuilt(
-            spark, path, qdf, "embedding", "vec_id", k=5, nprobe=4
-        )
-        maint_pq = SIM.ivfpq_topk_prebuilt(
-            spark, path, qdf, "embedding", "vec_id", k=5, nprobe=4
-        )
-        fresh, fresh_pq = fresh_fut.result()
-        n_mismatch = _n_mismatch_join(maint, fresh)
-        n_mismatch_pq = _n_mismatch_join(maint_pq, fresh_pq)
-        probe_pairs = maint.count()
-        max_drift = (
-            SIM.ann_index_drift(spark, path)
-            .agg(F.max("drift").alias("d"))
-            .collect()[0]["d"]
-        )
-    err_ratio = SIM.ann_index_pq_drift(spark, path).collect()[0]["err_ratio"]
+            # one aggregate job for both counts (total + appended-share) —
+            # two .count() actions would scan the assigned table twice
+            cnt = SIM.ann_index_read(spark, path)[1].agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count(F.when(F.col("id") % 10 >= 8, F.lit(1))).alias("na"),
+            ).collect()[0]
+            SIM.ann_index_compact(spark, path)
+            compact_preserved = int(
+                SIM.ann_index_read(spark, path)[1].count() == cnt["n"]
+            )
+            max_drift, gate = _max_drift(spark, path), _pq_gate(spark, path)
+            sm, smq = _ann_probes(spark, path, qdf)
+        finally:
+            sfr, sfq = fresh.result()
     return local_table(
         spark,
         [(
-            n_indexed,
-            n_appended,
-            probe_pairs,
-            n_mismatch,
-            n_mismatch_pq,
+            cnt["n"],
+            cnt["na"],
+            len(sm),
+            _n_mismatch(sm, sfr),
+            _n_mismatch(smq, sfq),
             append_preserved,
             compact_preserved,
             int(max_drift < 0.2),
-            int(err_ratio < 2.0),
+            int(gate["err_ratio"] < 2.0),
         )],
         "n_indexed long, n_appended long, probe_pairs long, "
         "n_mismatch long, n_mismatch_pq long, append_preserved_files long, "
@@ -12377,7 +12378,7 @@ def _clustered_embeddings(df_ids, salt: int, id_offset: int = 0, spread: bool = 
             yield pd.DataFrame({"vec_id": ids, "embedding": vecs})
 
     ids = df_ids.select("vec_id")
-    if spread and _SPREAD_GEN:
+    if spread:
         ids = ensure_parallelism(ids)
     return ids.mapInPandas(gen, "vec_id long, embedding array<double>")
 
@@ -12415,6 +12416,69 @@ def _retrain_shift_flood(spark, path: str, per_cell: int = 20):
     return local_table(spark, rows, "vec_id long, embedding array<double>")
 
 
+# the retrain cycle's index: the maintain cycle's on 8 cells
+_RETRAIN_INDEX = {**_MAINT_INDEX, "num_cells": 8}
+
+
+def _retrain_frames(spark, sf_dir):
+    """(base, post, qdf) on the clustered rig: the base corpus, the
+    post-retrain in-distribution batch, and the 5-row probe-query
+    frame — unspread, since the prebuilt probes iterate it with one
+    job per partition."""
+    ids = _t(spark, sf_dir, "embeddings").df
+    return (
+        _clustered_embeddings(ids, salt=1),
+        _clustered_embeddings(
+            ids.filter(F.col("vec_id") % 10 >= 8), salt=3,
+            id_offset=20_000_000,
+        ),
+        _clustered_embeddings(
+            ids.filter(F.col("vec_id") < 5), salt=1, spread=False
+        ),
+    )
+
+
+def _retrain_codebooks(spark, path: str):
+    """The PQ gate's action: retrain the codebooks on the index's
+    current contents, re-encode, reset the ledger. Returns the gate
+    row after it."""
+    SIM.ann_index_retrain_codebooks(spark, path, train_iters=2)
+    return _pq_gate(spark, path)
+
+
+def _retrain_cycle(spark, sf_dir):
+    """The product retrain cycle (the PQ drift gate's maintenance
+    action), without the declared query's verification: base build,
+    shifted-flood append, both gates, codebook retrain, post-retrain
+    append, both probes — in a run-private index. Returns the gate
+    outcomes and probe sizes."""
+    base, post, qdf = _retrain_frames(spark, sf_dir)
+    with _private_dir() as d:
+        path = f"{d}/maintained"
+        SIM.ann_index_write(
+            base, "embedding", "vec_id", path, **_RETRAIN_INDEX
+        )
+        flood = _retrain_shift_flood(spark, path)
+        gate_flood = _append_gated(spark, path, flood)
+        max_drift = _max_drift(spark, path)
+        _retrain_codebooks(spark, path)
+        gate_post = _append_gated(spark, path, post)
+        sm, smq = _ann_probes(spark, path, qdf)
+    return local_table(
+        spark,
+        [(
+            len(sm),
+            len(smq),
+            int(max_drift < 0.2),
+            int(gate_flood["err_ratio"] > 2.0),
+            int(gate_post["err_ratio"] < 1.5),
+        )],
+        "probe_pairs long, probe_pairs_pq long, "
+        "centroid_gate_silent_on_flood long, pq_gate_fired_on_flood long, "
+        "post_retrain_append_below_gate long",
+    )
+
+
 @_q(
     "ann_index_retrain_e2e",
     # declared-row evidence for the PQ drift gate's maintenance ACTION
@@ -12450,126 +12514,59 @@ def _retrain_shift_flood(spark, path: str, per_cell: int = 20):
     """,
 )
 def q_ann_index_retrain_e2e(spark, sf_dir):
-    import shutil
-
-    emb_ids = _t(spark, sf_dir, "embeddings").df
-    base = _clustered_embeddings(emb_ids, salt=1)
-    path = _maint_index_path(sf_dir) + "_retrain_e2e"
-    # fresh base build every invocation (same double-append guard as
-    # maintain_e2e: the static partitioned overwrite wipes prior runs)
-    SIM.ann_index_write(
-        base, "embedding", "vec_id", path, num_cells=8, train_iters=3,
-        layout="cells", pq=(8, 16, 2),
-    )
-    n_base = spark.read.parquet(f"{path}/assigned").count()
-    # 1. shifted flood: PQ gate must fire, centroid gate must not
-    flood = _retrain_shift_flood(spark, path)
-    # the from-scratch-rebuild arm depends only on (base, flood,
-    # batch3, fresh_path) — all defined/derivable here — so it runs on
-    # a second driver thread under the whole maintained sequence
-    # (append → gates → retrain → append → gates → probes), guide
-    # §2.6 / _fresh_arm. batch3/qdf are plan-only definitions.
-    batch3 = _clustered_embeddings(
-        emb_ids.filter(F.col("vec_id") % 10 >= 8), salt=3,
-        id_offset=20_000_000,
-    )
-    qdf = _clustered_embeddings(
-        emb_ids.filter(F.col("vec_id") < 5), salt=1, spread=False
-    )
-    fresh_path = f"{path}_fresharm"
-
-    def _fresh_arm_run():
-        shutil.rmtree(fresh_path, ignore_errors=True)
+    # _retrain_cycle's steps with the verification between them
+    base, post, qdf = _retrain_frames(spark, sf_dir)
+    with _private_dir() as d:
+        path = f"{d}/maintained"
         SIM.ann_index_write(
-            base.unionByName(flood).unionByName(batch3), "embedding",
-            "vec_id", fresh_path, num_cells=8, train_iters=3,
-            layout="cells", train_on=base, pq=(8, 16, 2),
-            pq_train_on=base.unionByName(flood),
+            base, "embedding", "vec_id", path, **_RETRAIN_INDEX
         )
-        fr = SIM.ivf_topk_prebuilt(
-            spark, fresh_path, qdf, "embedding", "vec_id", k=5, nprobe=4
+        n_base = spark.read.parquet(f"{path}/assigned").count()
+        flood = _retrain_shift_flood(spark, path)
+        fresh = _rebuild_arm(
+            spark, f"{d}/rebuilt", qdf,
+            base.unionByName(flood).unionByName(post), train_on=base,
+            pq_train_on=base.unionByName(flood), **_RETRAIN_INDEX,
         )
-        frq = SIM.ivfpq_topk_prebuilt(
-            spark, fresh_path, qdf, "embedding", "vec_id", k=5, nprobe=4
-        )
-        if _DRIVER_PROBE_CMP:
-            return _probe_set(fr), _probe_set(frq)
-        return fr, frq
-
-    fresh_fut = _fresh_arm(_fresh_arm_run)
-    SIM.ann_index_append(spark, path, flood, "embedding", "vec_id")
-    gate_before = SIM.ann_index_pq_drift(spark, path).collect()[0]
-    max_drift = (
-        SIM.ann_index_drift(spark, path)
-        .agg(F.max("drift").alias("d"))
-        .collect()[0]["d"]
-    )
-    n_flood = gate_before["n_appended"]
-    # 2. the gate's action: retrain codebooks, re-encode, reset ledger
-    SIM.ann_index_retrain_codebooks(spark, path, train_iters=2)
-    gate_reset = SIM.ann_index_pq_drift(spark, path).collect()[0]
-    ledger_reset = int(
-        gate_reset["n_base"] == n_base + n_flood
-        and gate_reset["n_appended"] == 0
-        and gate_reset["err_ratio"] == 1.0
-    )
-    flood_in_sample = int(
-        gate_reset["base_mqerr"] < gate_before["appended_mqerr"]
-    )
-    # 3. post-retrain in-distribution traffic measures ~1 again
-    SIM.ann_index_append(spark, path, batch3, "embedding", "vec_id")
-    gate_after = SIM.ann_index_pq_drift(spark, path).collect()[0]
-    n_post = gate_after["n_appended"]
-    # 4. probe equality vs a from-scratch rebuild: same base-trained
-    # centroids, codebooks trained on the retrain-time contents. The
-    # index is final here (no writer remains), so the recount and the
-    # two probes are independent tail reads (_tail_reads, guide §2.6).
-    if _DRIVER_PROBE_CMP:
-        n_final, sm, smq = _tail_reads(
-            lambda: spark.read.parquet(f"{path}/assigned").count(),
-            lambda: _probe_set(
-                SIM.ivf_topk_prebuilt(
-                    spark, path, qdf, "embedding", "vec_id", k=5, nprobe=4
-                )
-            ),
-            lambda: _probe_set(
-                SIM.ivfpq_topk_prebuilt(
-                    spark, path, qdf, "embedding", "vec_id", k=5, nprobe=4
-                )
-            ),
-        )
-        sfr, sfq = fresh_fut.result()
-        probe_pairs = len(sm)
-        n_mismatch = len(sm | sfr) - len(sm)
-        n_mismatch_pq = len(smq | sfq) - len(smq)
-    else:
-        n_final = spark.read.parquet(f"{path}/assigned").count()
-        maint = SIM.ivf_topk_prebuilt(
-            spark, path, qdf, "embedding", "vec_id", k=5, nprobe=4
-        )
-        maint_pq = SIM.ivfpq_topk_prebuilt(
-            spark, path, qdf, "embedding", "vec_id", k=5, nprobe=4
-        )
-        fresh, fresh_pq = fresh_fut.result()
-        probe_pairs = maint.count()
-        n_mismatch = _n_mismatch_join(maint, fresh)
-        n_mismatch_pq = _n_mismatch_join(maint_pq, fresh_pq)
-
+        # join the arm before the directory goes, on error paths too
+        try:
+            # 1. shifted flood: PQ gate must fire, centroid gate must not
+            gate_before = _append_gated(spark, path, flood)
+            max_drift = _max_drift(spark, path)
+            n_flood = gate_before["n_appended"]
+            # 2. the gate's action: retrain codebooks, re-encode, reset ledger
+            gate_reset = _retrain_codebooks(spark, path)
+            ledger_reset = int(
+                gate_reset["n_base"] == n_base + n_flood
+                and gate_reset["n_appended"] == 0
+                and gate_reset["err_ratio"] == 1.0
+            )
+            flood_in_sample = int(
+                gate_reset["base_mqerr"] < gate_before["appended_mqerr"]
+            )
+            # 3. post-retrain in-distribution traffic measures ~1 again
+            gate_after = _append_gated(spark, path, post)
+            n_final = spark.read.parquet(f"{path}/assigned").count()
+            # 4. probe equality vs a from-scratch rebuild: same base-trained
+            # centroids, codebooks trained on the retrain-time contents
+            sm, smq = _ann_probes(spark, path, qdf)
+        finally:
+            sfr, sfq = fresh.result()
     return local_table(
         spark,
         [(
             n_base,
             n_flood,
-            n_post,
+            gate_after["n_appended"],
             n_final,
-            probe_pairs,
+            len(sm),
             int(max_drift < 0.2),
             int(gate_before["err_ratio"] > 2.0),
             ledger_reset,
             flood_in_sample,
             int(gate_after["err_ratio"] < 1.5),
-            n_mismatch,
-            n_mismatch_pq,
+            _n_mismatch(sm, sfr),
+            _n_mismatch(smq, sfq),
         )],
         "n_base long, n_flood long, n_post_appended long, "
         "n_indexed_final long, probe_pairs long, "

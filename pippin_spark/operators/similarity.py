@@ -470,6 +470,11 @@ def _assign_cells(
 # to a single action. Data-sized, not core-count-sized.
 _KMEANS_LOCAL_MAX = 65_536
 
+# Row cap of the deterministic training sample every sample-trained
+# model pulls to the driver (_collect_sample): bounded driver memory
+# at any corpus size.
+_TRAIN_CAP = 65_536
+
 
 def _round_half_up(x: float, scale: int) -> float:
     """Spark's round(double, scale) replica: BigDecimal.valueOf(d)
@@ -743,7 +748,7 @@ def sample_kmeans_centroids(
     num_cells: int,
     iters: int = 5,
     train_mod: int = 1,
-    train_cap: int = 65536,
+    train_cap: int = _TRAIN_CAP,
     normalize: bool = False,
 ) -> DataFrame:
     """Centroids via the faiss/ScaNN training pattern: a deterministic
@@ -1063,7 +1068,7 @@ def _ann_index_write_body(
     if fused is not None:
         spark = corpus.sparkSession
         centroids = _kmeans_local(spark, fused, num_cells, train_iters, "cosine")
-        pq_sample = _fused_pq_sample(fused, cap=65536)
+        pq_sample = _fused_pq_sample(fused, cap=_TRAIN_CAP)
         assigned = _assign_cells(
             corpus.select(
                 F.col(id_col).alias("id"),
@@ -1291,7 +1296,7 @@ def pq_codebooks_residual(
     codebook_k: int = 16,
     train_iters: int = 2,
     train_mod: int = 1,
-    train_cap: int = 65536,
+    train_cap: int = _TRAIN_CAP,
 ):
     """PQ codebooks over IVF RESIDUALS (the FAISS IVFx,PQy default,
     by_residual=True): each sampled unit vector is assigned to its
@@ -1728,12 +1733,10 @@ def ann_index_pq_drift(spark, path: str) -> DataFrame:
     NULL-skipping sums, NULL propagation through the means, HALF_UP
     round-6 via _round_half_up, ANSI divide-by-zero raising) and
     returns a LocalRelation — a maintenance loop polls this gate, and
-    a poll should cost zero Spark jobs. _LEDGER_DRIVER=False keeps the
-    Spark aggregation; test_pq_drift_driver_matches_spark pins both
-    paths row-equal on real build/append/repair ledgers."""
+    a poll should cost zero Spark jobs. test_pq_drift_driver_matches_spark
+    pins it row-equal to the Spark aggregation (_pq_drift_spark) on
+    real build/append/repair ledgers."""
     _check_retrain_complete(path)
-    if not _LEDGER_DRIVER:
-        return _pq_drift_spark(spark, path)
     rows = [
         r
         for r in sidecar_parquet_rows(f"{path}/pq_stats")
@@ -1783,13 +1786,9 @@ def ann_index_pq_drift(spark, path: str) -> DataFrame:
     )
 
 
-# ann_index_pq_drift's Spark-aggregation arm: True computes the gate
-# on the driver from the sidecar ledger (zero jobs); False keeps the
-# Spark plan — the A/B + equality-pin baseline.
-_LEDGER_DRIVER = True
-
-
 def _pq_drift_spark(spark, path: str) -> DataFrame:
+    """ann_index_pq_drift as a Spark aggregation: the reference
+    implementation the driver gate's equality test compares against."""
     stats = spark.read.parquet(f"{path}/pq_stats")
     agg = (
         stats.filter(F.col("n") > 0)
@@ -2119,7 +2118,7 @@ def kcenter_select(
     id_col: str,
     k: int = 16,
     train_mod: int = 1,
-    train_cap: int = 65536,
+    train_cap: int = _TRAIN_CAP,
 ) -> tuple[DataFrame, DataFrame]:
     """Greedy k-center coreset selection (Gonzalez 1985, the 2-approx
     farthest-point heuristic) — the "pick k maximally diverse
@@ -2718,7 +2717,7 @@ def pq_codebooks(
     codebook_k: int = 16,
     train_iters: int = 2,
     train_mod: int = 1,
-    train_cap: int = 65536,
+    train_cap: int = _TRAIN_CAP,
     _sample=None,
 ):
     """Train product-quantization codebooks (Jégou, Douze, Schmid,

@@ -32,6 +32,16 @@ def _nodes(plan: str, name: str) -> int:
     return len(re.findall(rf"\(\d+\) {name}\b", plan))
 
 
+# Every Python exec node but row-at-a-time BatchEvalPython (counted as
+# row_udfs): the pandas/Arrow UDF family — MapInArrow prints as
+# PythonMapInArrow on some Spark versions — and both UDTF eval nodes.
+_PYTHON_EXEC = (
+    r"(?:Python)?(?:ArrowEvalPython(?:UDTF)?|BatchEvalPythonUDTF"
+    r"|MapIn(?:Pandas|Arrow)|FlatMap(?:Co)?GroupsInPandas(?:WithState)?"
+    r"|AggregateInPandas|WindowInPandas)"
+)
+
+
 def plan_stats(df: DataFrame) -> Dict[str, int]:
     """Count the scale-relevant physical-plan features:
 
@@ -53,17 +63,14 @@ def plan_stats(df: DataFrame) -> Dict[str, int]:
         "single_partition": len(
             re.findall(r"Arguments: SinglePartition", p)
         ),
-        "arrow_stages": (
-            _nodes(p, "ArrowEvalPython")
-            + _nodes(p, "MapInPandas")
-            + _nodes(p, "FlatMapGroupsInPandas")
-            + _nodes(p, "FlatMapCoGroupsInPandas")
-            + _nodes(p, "FlatMapGroupsInPandasWithState")
-        ),
+        "arrow_stages": _nodes(p, _PYTHON_EXEC),
         "row_udfs": _nodes(p, "BatchEvalPython"),
         "broadcast_joins": _nodes(p, "BroadcastHashJoin"),
         "sortmerge_joins": _nodes(p, "SortMergeJoin"),
-        "codegen_spans": len(re.findall(r"WholeStageCodegen \(\d+\)", p)),
+        # formatted mode tags each fused node "[codegen id : N]"
+        "codegen_spans": len(
+            set(re.findall(r"\[codegen id : (\d+)\]", p))
+        ),
         "scans_with_pushdown": len(
             re.findall(r"PushedFilters: \[[^\]]+\]", p)
         ),

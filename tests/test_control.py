@@ -226,3 +226,18 @@ def test_observation_metrics_ride_the_action(spark):
     total = observed.agg(SF.sum("value")).collect()[0][0]
     assert total == 15
     assert obs.get == {"rows_seen": 5, "value_sum": 15}
+
+
+def test_helper_thread_jobs_keep_callers_job_group(spark):
+    # the maintenance rows' helper thread inherits the caller's job
+    # group, so cancelJobGroup (interrupt, timeouts) reaches its jobs
+    from pippin_spark.entry_queries import _on_helper_thread
+
+    sc = spark.sparkContext
+    group = "pippin-helper-thread-group"
+    sc.setJobGroup(group, "helper thread jobs", True)
+    try:
+        _on_helper_thread(spark, lambda: spark.range(10).count()).result()
+    finally:
+        sc.setJobGroup(None, None)  # type: ignore[arg-type]
+    assert sc.statusTracker().getJobIdsForGroup(group)

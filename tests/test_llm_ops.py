@@ -2990,12 +2990,16 @@ def test_hard_negative_both_matches_single_modes(spark):
 
 def test_probe_mismatch_driver_matches_join(spark):
     # batch-12 equality pin: the driver-side set compare the
-    # maintenance rows use (_probe_set / len-union arithmetic) counts
+    # maintenance rows use (_probe_set / _n_mismatch) counts
     # EXACTLY what the all-JVM full_outer-join compare counts, on
     # overlapping, disjoint and identical probe results — including a
     # double column, where join equality is IEEE-bit equality, the
     # same identity tuple() preserves through collect()
-    from pippin_spark.entry_queries import _n_mismatch_join, _probe_set
+    from pippin_spark.entry_queries import (
+        _n_mismatch,
+        _n_mismatch_join,
+        _probe_set,
+    )
 
     def df(rows):
         return spark.createDataFrame(
@@ -3007,8 +3011,8 @@ def test_probe_mismatch_driver_matches_join(spark):
     b = df([(1, 10, 0.5, 1), (1, 12, 0.25, 2), (2, 10, 0.75, 1)])
     empty = df([]).limit(0)
     for x, y in [(a, same), (a, b), (a, empty), (empty, a), (a, a)]:
-        sx, sy = _probe_set(x), _probe_set(y)
-        assert len(sx | sy) - len(sx) == _n_mismatch_join(x, y)
+        got = _n_mismatch(_probe_set(x), _probe_set(y))
+        assert got == _n_mismatch_join(x, y)
 
 
 def test_pq_drift_driver_matches_spark(spark, tmp_path):
@@ -3047,3 +3051,62 @@ def test_pq_drift_driver_matches_spark(spark, tmp_path):
     S.ann_index_repair_ledger(spark, path)
     a, b = both()
     assert a == b
+
+
+def _pq_train_frame(spark):
+    # shuffled ids (the sample is ascending-id), a zero-norm row (passes
+    # through unnormalized) and more rows than the cap below
+    import random
+
+    rnd = random.Random(5)
+    ids = list(range(300))
+    rnd.shuffle(ids)
+    rows = [(i, [rnd.gauss(0.0, 1.0) for _ in range(8)]) for i in ids]
+    rows.append((1000, [0.0] * 8))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def test_fused_pq_sample_matches_collect_sample_bitwise(spark):
+    # the fused training collect replays _collect_sample(train_mod=1,
+    # normalize=True) on the driver: same rows, same order, same bits
+    df = _pq_train_frame(spark)
+    for cap in (120, S._TRAIN_CAP):
+        fused = S._fused_pq_sample(
+            S._fused_train_rows(df, "embedding", "vec_id"), cap
+        )
+        ref = S._collect_sample(
+            df, "embedding", "vec_id", 1, cap, normalize=True
+        )
+        assert fused.shape == ref.shape and fused.tobytes() == ref.tobytes()
+
+
+def test_fused_training_falls_back_above_local_guard(
+    spark, tmp_path, monkeypatch
+):
+    # above _KMEANS_LOCAL_MAX the fused collect declines (None) and the
+    # build takes the unfused path: distributed k-means + _collect_sample
+    # — and writes the same index the fused build writes
+    from pippin_spark.operators.util import sidecar_parquet_rows
+
+    df = _pq_train_frame(spark)
+
+    def build(name):
+        path = str(tmp_path / name)
+        S.ann_index_write(
+            df, "embedding", "vec_id", path, num_cells=4, train_iters=2,
+            layout="cells", pq=(4, 8, 2),
+        )
+        assigned = sorted(
+            (r["id"], r["cell"], list(r["codes"]))
+            for r in spark.read.parquet(f"{path}/assigned").collect()
+        )
+        cents = sorted(
+            (r["cell"], list(r["centroid"]))
+            for r in sidecar_parquet_rows(f"{path}/centroids")
+        )
+        return cents, assigned
+
+    fused = build("fused")
+    monkeypatch.setattr(S, "_KMEANS_LOCAL_MAX", 100)
+    assert S._fused_train_rows(df, "embedding", "vec_id") is None
+    assert build("unfused") == fused

@@ -688,6 +688,23 @@ def test_pq_scan_is_one_arrow_pass(spark, qs):
     assert "BatchEvalPython" not in p
 
 
+def test_plan_stats_counts_map_in_arrow(spark):
+    # arrow_stages counts the whole Python-exec family, mapInArrow too
+    from pippin_spark import plans as P
+
+    df = spark.range(10).mapInArrow(lambda batches: batches, "id long")
+    assert P.plan_stats(df)["arrow_stages"] == 1
+
+
+def test_plan_stats_counts_codegen_spans(spark):
+    # formatted EXPLAIN marks whole-stage-codegen regions only as
+    # "[codegen id : N]" on the fused nodes: one region here
+    from pippin_spark import plans as P
+
+    df = spark.range(10).selectExpr("id + 1 AS x").filter("x > 3")
+    assert P.plan_stats(df)["codegen_spans"] == 1
+
+
 def test_plans_module_stats_and_guard(spark, qs):
     from pippin_spark import plans as P
 
@@ -827,24 +844,20 @@ def test_sft_render_multiturn_zero_shuffle(spark, qs):
     assert "Window" not in p
 
 
-def test_maintained_index_probe_prunes_partitions(spark):
+def test_maintained_index_probe_prunes_partitions(spark, tmp_path):
     # the layout='cells' (maintained) index is partitioned BY cell, so
     # the probe's IN-literal prunes whole DIRECTORIES at planning time:
     # the scan's PartitionFilters must carry cell IN (...) and the
     # partition count read must be < the total cell count
-    import glob
-
-    from pippin_spark.entry_queries import _maint_index_path, _t
+    from pippin_spark.entry_queries import _t
     from pippin_spark.operators import similarity as SIM
 
     emb = _t(spark, SF, "embeddings").df
-    path = _maint_index_path(SF)
-    if not glob.glob(f"{path}/assigned/cell=*"):
-        base = emb.filter(F.col("vec_id") % 10 < 8)
-        SIM.ann_index_write(
-            base, "embedding", "vec_id", path, num_cells=16,
-            train_iters=3, layout="cells",
-        )
+    path = str(tmp_path / "maintained")
+    SIM.ann_index_write(
+        emb.filter(F.col("vec_id") % 10 < 8), "embedding", "vec_id", path,
+        num_cells=16, train_iters=3, layout="cells",
+    )
     q = emb.filter(F.col("vec_id") < 5)
     probe = SIM.ivf_topk_prebuilt(
         spark, path, q, "embedding", "vec_id", k=5, nprobe=4

@@ -17,47 +17,16 @@ itself lives in the StreamingQuery, not the returned DataFrame).
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def plan_stats(df) -> dict:
-    p = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-
-    def nodes(name: str) -> int:
-        return len(re.findall(rf"\(\d+\) {name}\b", p))
-
-    exchanges = nodes("Exchange")
-    singles = len(re.findall(r"Arguments: SinglePartition", p))
-    arrow = (
-        nodes("ArrowEvalPython")
-        + nodes("MapInPandas")
-        + nodes("FlatMapGroupsInPandas")
-        + nodes("FlatMapGroupsInPandasWithState")
-    )
-    row_udf = nodes("BatchEvalPython")
-    bhj = nodes("BroadcastHashJoin")
-    smj = nodes("SortMergeJoin")
-    codegen = len(set(re.findall(r"\[codegen id : (\d+)\]", p)))
-    pushed = len(re.findall(r"PushedFilters: \[[^\]]", p))
-    return {
-        "exchanges": exchanges,
-        "single_partition": singles,
-        "arrow_stages": arrow,
-        "row_udfs": row_udf,
-        "broadcast_joins": bhj,
-        "sortmerge_joins": smj,
-        "codegen_spans": codegen,
-        "scans_with_pushdown": pushed,
-    }
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     out_md = sys.argv[2] if len(sys.argv) > 2 else "PLAN_AUDIT.md"
 
+    from pippin_spark.plans import plan_stats
     from pippin_spark.session import get_spark
 
     spark = get_spark("pippin-plan-audit")
@@ -75,16 +44,7 @@ def main() -> None:
             first = (str(exc).splitlines() or ["<no message>"])[0]
             errors.append((name, first[:100]))
 
-    cols = [
-        "exchanges",
-        "single_partition",
-        "arrow_stages",
-        "row_udfs",
-        "broadcast_joins",
-        "sortmerge_joins",
-        "codegen_spans",
-        "scans_with_pushdown",
-    ]
+    cols = list(rows[0][1]) if rows else []
     with open(out_md, "w") as f:
         f.write(
             "# Plan audit (auto-generated by tools/plan_audit.py at "
