@@ -19,6 +19,8 @@ import time
 
 import pandas as pd
 
+from pippin_spark import entry_queries as EQ
+
 HEADLINE = [
     # reference-parity core
     "q1_pricing",
@@ -111,15 +113,11 @@ HEADLINE = [
     "diversity_kcenter",
     "agg_count_min_events",
     # round-5 additions: the remaining never-benched nontrivial ops
-    # (VERDICT r4 #5) + the multi-probe IVF kNN as its OWN row
-    # ("knn_join_ivf" keeps timing the nprobe=1 build so its
-    # round-over-round comparison stays apples-to-apples; the declared
-    # query moved to nprobe=2)
+    # (VERDICT r4 #5)
     "span_corrupt_docs",
     "fim_transform_docs",
     "pretrain_prep_e2e",
     "semantic_dedup_e2e",
-    "knn_join_ivf_nprobe2",
     # round-5 session-2 additions: span-level scrub (the Lee et al.
     # rewrite) and the exact-integer quality-classifier trainer.
     # quality_classifier_score is NOT benched: its builder re-runs the
@@ -388,9 +386,23 @@ HEADLINE_VARIANT_OF = {
 }
 
 
-# HEADLINE rows that are bench-only parameter variants (exist only as
-# raw-override entries, not declared queries)
-BENCH_ONLY = {"knn_join_ivf_nprobe2"}
+# Rows that time a declared query's product body instead of the whole
+# declared query. The declared query runs the same code and adds only
+# its verification (the exact arm and recall summary, or the
+# maintenance cycle's recounts, snapshots and rebuild arm), which would
+# otherwise be what the row measures.
+PRODUCT_BODY = {
+    "ann_index_maintain_e2e": EQ._maintain_cycle,
+    "ann_index_retrain_e2e": EQ._retrain_cycle,
+    "dedup_minhash": EQ._minhash_pairs,
+    "dedup_simhash": EQ._simhash_pairs,
+    "ann_topk_ivf_prebuilt": EQ._ivf_prebuilt_probe,
+    "hard_negative_ivf_prebuilt": EQ._hn_prebuilt_probe,
+    "ann_topk_lsh": EQ._lsh_probe,
+    "ann_topk_pq": EQ._pq_probe,
+    "knn_join_ivf": EQ._knn_ivf,
+    "streaming_minhash_dedup": EQ._stream_minhash_pairs,
+}
 
 
 def check_headline_coverage(declared) -> None:
@@ -399,7 +411,9 @@ def check_headline_coverage(declared) -> None:
     or deleted query must not leave a stale HEADLINE name (which
     `names = [n for n in HEADLINE if n in qs]` would silently stop
     timing) or a stale exclusion entry (which would silently
-    'explain' a name that no longer exists)."""
+    'explain' a name that no longer exists). A PRODUCT_BODY entry
+    must name a timed row: any other would be code the bench never
+    runs."""
     H = set(HEADLINE)
     excl_sets = (
         EXCLUDE_STREAM_RIG, EXCLUDE_IO_API, EXCLUDE_BUILD_ONCE,
@@ -420,7 +434,7 @@ def check_headline_coverage(declared) -> None:
     assert not both, f"both timed and excluded: {both}"
     bad_reps = sorted(set(HEADLINE_VARIANT_OF.values()) - H)
     assert not bad_reps, f"variant representative not timed: {bad_reps}"
-    stale_headline = sorted(H - D - BENCH_ONLY)
+    stale_headline = sorted(H - D)
     assert not stale_headline, (
         f"HEADLINE names not declared (stale after a rename/delete?): "
         f"{stale_headline}"
@@ -428,6 +442,8 @@ def check_headline_coverage(declared) -> None:
     stale_excl = sorted(excluded - D)
     assert not stale_excl, f"exclusion entries not declared: {stale_excl}"
     assert len(HEADLINE) == len(H), "duplicate HEADLINE entries"
+    stray = sorted(set(PRODUCT_BODY) - H)
+    assert not stray, f"product-body override of an untimed row: {stray}"
 
 
 def main() -> None:
@@ -468,157 +484,7 @@ def main() -> None:
     # file creation — then report the best of three warm runs (the
     # engine's steady-state throughput, what a long-running cluster job
     # sees; min-of-N is the standard noise-robust point estimate).
-    # The declared sketch queries are recall summaries (they run the
-    # sketch AND its exact ground truth so the driver can hash-check
-    # them); the bench must keep timing the raw operator itself —
-    # otherwise the headline measures the correctness harness.
-    from pyspark.sql import functions as F
-
-    from pippin_spark import entry_queries as EQ
-    from pippin_spark.operators import dedup as DEDUP
-    from pippin_spark.operators import similarity as SIM
-    from pippin_spark.pipeline import Pipeline
-
-    def _raw_minhash(spark, sf_dir):
-        docs = Pipeline.from_table(spark, sf_dir, "documents").df
-        return DEDUP.dedup_minhash_lsh(
-            docs, "text", "doc_id", n=3, num_hashes=64, bands=16, threshold=0.5
-        )
-
-    def _raw_simhash(spark, sf_dir):
-        docs = Pipeline.from_table(spark, sf_dir, "documents").df
-        return DEDUP.dedup_simhash(docs, "text", "doc_id", max_hamming=3)
-
-    def _raw_ivf(spark, sf_dir):
-        emb = Pipeline.from_table(spark, sf_dir, "embeddings").df
-        return SIM.ivf_topk(
-            emb, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id",
-            k=5, num_cells=16, nprobe=4,
-        )
-
-    def _raw_ivf_prebuilt(spark, sf_dir):
-        # probe-only latency: the declared query also runs the exact
-        # brute-force arm for its recall pin — here we time JUST the
-        # prebuilt probe (build-if-missing runs once, outside the reps)
-        import os
-
-        from pippin_spark.entry_queries import _ann_index_path
-
-        emb = Pipeline.from_table(spark, sf_dir, "embeddings").df
-        path = _ann_index_path(sf_dir)
-        if not os.path.exists(f"{path}/assigned"):
-            SIM.ann_index_write(
-                emb, "embedding", "vec_id", path, num_cells=16, train_iters=3
-            )
-        return SIM.ivf_topk_prebuilt(
-            spark, path, emb.filter(F.col("vec_id") < 5), "embedding",
-            "vec_id", k=5, nprobe=4,
-        )
-
-    def _raw_hn_prebuilt(spark, sf_dir):
-        # corpus-scale hard-negative probe against the persisted
-        # labeled index: every corpus vector an anchor, NO Lloyd
-        # retrain / reassignment — the delta vs hard_negative_ivf's
-        # row is exactly what index persistence buys a training loop
-        import os
-
-        from pippin_spark.entry_queries import _hn_index_path
-
-        emb = Pipeline.from_table(spark, sf_dir, "embeddings").df
-        path = _hn_index_path(sf_dir)
-        if not os.path.exists(f"{path}/assigned"):
-            SIM.ann_index_write(
-                emb, "embedding", "vec_id", path, num_cells=4, train_iters=2,
-                train_mode="sample", extra_cols=("label",),
-            )
-        return SIM.hard_negative_ivf_prebuilt(
-            spark, path, "label", k=3, nprobe=2
-        )
-
-    def _raw_lsh(spark, sf_dir):
-        emb = Pipeline.from_table(spark, sf_dir, "embeddings").df
-        return SIM.lsh_topk(
-            emb, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id",
-            k=5, num_tables=16, num_planes=4, dim=64,
-        )
-
-    def _raw_knn_ivf(spark, sf_dir):
-        emb = Pipeline.from_table(spark, sf_dir, "embeddings").df
-        return SIM.knn_join_ivf(
-            emb, "embedding", "vec_id", k=3, num_cells=4, train_iters=2
-        )
-
-    def _raw_knn_ivf2(spark, sf_dir):
-        emb = Pipeline.from_table(spark, sf_dir, "embeddings").df
-        return SIM.knn_join_ivf(
-            emb, "embedding", "vec_id", k=3, num_cells=4, train_iters=2,
-            nprobe=2,
-        )
-
-    def _raw_pq(spark, sf_dir):
-        emb = Pipeline.from_table(spark, sf_dir, "embeddings").df
-        return SIM.pq_topk(
-            emb, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id",
-            k=5, m=8, codebook_k=16, train_iters=2, overfetch=20,
-        )
-
-    def _raw_stream_minhash(spark, sf_dir):
-        # the stream-side ingest gate alone (signature UDF -> stateless
-        # stream-static join -> drain); the declared query additionally
-        # recomputes the batch ground truth for its equality oracle
-        docs = Pipeline.from_table(spark, sf_dir, "documents").df
-        corpus = docs.filter(F.col("doc_id") % 10 < 8)
-        store = DEDUP.text_minhash_signatures(
-            corpus, "text", n=3, num_hashes=64, bands=16, include_sig=False
-        ).select(
-            F.col("doc_id").alias("corpus_id"),
-            F.posexplode("bands").alias("b_pos", "b_hash"),
-        )
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir)
-            .filter(F.col("doc_id") % 10 >= 8)
-        )
-        sbands = DEDUP.text_minhash_signatures(
-            stream, "text", n=3, num_hashes=64, bands=16, include_sig=False
-        ).select(
-            F.col("doc_id").alias("stream_id"),
-            F.posexplode("bands").alias("b_pos", "b_hash"),
-        )
-        matched = sbands.join(F.broadcast(store), ["b_pos", "b_hash"]).select(
-            "stream_id", "corpus_id"
-        )
-        q = (
-            matched.writeStream.format("memory")
-            .queryName("bench_stream_minhash")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation", EQ._stream_ckpt("bench_ckpt_minhash_")
-            )
-            .start()
-        )
-        EQ._drain(q)
-        return spark.table("bench_stream_minhash").distinct()
-
-    qs = dict(qs)
-    # the product maintenance cycles: the declared queries' steps
-    # without their verification (rebuild arm, recounts, snapshots)
-    qs["ann_index_maintain_e2e"] = EQ._maintain_cycle
-    qs["ann_index_retrain_e2e"] = EQ._retrain_cycle
-    qs["dedup_minhash"] = _raw_minhash
-    qs["streaming_minhash_dedup"] = _raw_stream_minhash
-    qs["dedup_simhash"] = _raw_simhash
-    qs["ann_topk_ivf"] = _raw_ivf
-    qs["ann_topk_ivf_prebuilt"] = _raw_ivf_prebuilt
-    qs["hard_negative_ivf_prebuilt"] = _raw_hn_prebuilt
-    qs["ann_topk_lsh"] = _raw_lsh
-    qs["knn_join_ivf"] = _raw_knn_ivf
-    qs["knn_join_ivf_nprobe2"] = _raw_knn_ivf2
-    qs["ann_topk_pq"] = _raw_pq
-    # resolve the suite AFTER the raw overrides: bench-only names
-    # (e.g. knn_join_ivf_nprobe2) exist only in the override dict
+    qs = {**qs, **PRODUCT_BODY}
     names = [n for n in HEADLINE if n in qs]
 
     # Entries whose WORK runs inside the query builder need the builder
@@ -644,7 +510,6 @@ def main() -> None:
         "exact_median_orders",
         "pagerank_trade_graph",
         "knn_join_ivf",
-        "knn_join_ivf_nprobe2",
         "ann_topk_pq",
         "ann_topk_ivfpq",  # Lloyd + codebook training at construction
         # probe-cell selection + chunk staging at construction; index

@@ -1090,6 +1090,22 @@ def q_dedup_ngram_keep(spark, sf_dir):
     return DEDUP.dedup_filter(docs, pairs, "doc_id").select("doc_id")
 
 
+# Product bodies: the approximate arm a pipeline runs, one function
+# (spark, sf_dir) -> DataFrame each; bench.py's rows time these. The
+# declared query calls its body and adds only the verification (the
+# exact arm and pair_agreement), passing the input frame it already
+# read: every schema-less parquet read runs one footer-inference job.
+
+
+def _minhash_pairs(spark, sf_dir, docs=None):
+    """dedup_minhash's product body: the MinHash-LSH near-duplicate
+    pairs (signature → banding → bucket → verify)."""
+    docs = _t(spark, sf_dir, "documents").df if docs is None else docs
+    return DEDUP.dedup_minhash_lsh(
+        docs, "text", "doc_id", n=3, num_hashes=64, bands=16, threshold=0.5
+    )
+
+
 @_q(
     "dedup_minhash",
     # expected counts are fixed properties of the deterministic sketch
@@ -1115,20 +1131,22 @@ def q_dedup_ngram_keep(spark, sf_dir):
 )
 def q_dedup_minhash(spark, sf_dir):
     # MinHash-LSH scored against the exact blocked n-gram Jaccard
-    # ground truth at the same threshold: the sketch pipeline runs
-    # end-to-end (signature → banding → bucket → verify) and the
-    # summary row pins its recall/precision — a HASH-CHECKED oracle for
-    # an op whose raw pair set is not SQL-expressible (xxhash64-based).
-    # The expected counts are fixed properties of the deterministic
-    # sketch at each test SF (oracle dispatches on corpus size).
+    # ground truth at the same threshold: the summary row pins its
+    # recall/precision — a HASH-CHECKED oracle for an op whose raw pair
+    # set is not SQL-expressible (xxhash64-based). The expected counts
+    # are fixed properties of the deterministic sketch at each test SF
+    # (oracle dispatches on corpus size).
     docs = _t(spark, sf_dir, "documents").df
-    sketch = DEDUP.dedup_minhash_lsh(
-        docs, "text", "doc_id", n=3, num_hashes=64, bands=16, threshold=0.5
-    ).select("id_a", "id_b")
-    exact = DEDUP.dedup_ngram_jaccard(docs, "text", "doc_id", n=3, threshold=0.5).select(
-        "id_a", "id_b"
-    )
+    sketch = _minhash_pairs(spark, sf_dir, docs)
+    exact = DEDUP.dedup_ngram_jaccard(docs, "text", "doc_id", n=3, threshold=0.5)
     return DEDUP.pair_agreement(exact, sketch)
+
+
+def _simhash_pairs(spark, sf_dir, docs=None):
+    """dedup_simhash's product body: the SimHash pigeonhole-banded
+    pairs within hamming distance 3."""
+    docs = _t(spark, sf_dir, "documents").df if docs is None else docs
+    return DEDUP.dedup_simhash(docs, "text", "doc_id", max_hamming=3)
 
 
 @_q(
@@ -1155,9 +1173,7 @@ def q_dedup_simhash(spark, sf_dir):
     # oracle checks a mathematical property, not just reproducibility.
     # Brute force is a self-join + bit_count(xor) — harness-scale only.
     docs = _t(spark, sf_dir, "documents").df
-    sketch = DEDUP.dedup_simhash(docs, "text", "doc_id", max_hamming=3).select(
-        "id_a", "id_b"
-    )
+    sketch = _simhash_pairs(spark, sf_dir, docs)
     sigs = DEDUP.simhash_signatures(docs.select("doc_id", "text"), "text").select(
         F.col("doc_id").alias("id"), "sig"
     )
@@ -1340,6 +1356,17 @@ def q_ann_topk_bruteforce(spark, sf_dir):
     return SIM.brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id", k=5)
 
 
+def _recall_at_k(emb, q, approx, k: int):
+    """The recall@k summary row of an ANN arm: ``approx``'s
+    (query_id, neighbor_id) pairs against the exact brute-force top-k
+    of the queries ``q`` over ``emb``."""
+    return DEDUP.pair_agreement(
+        SIM.brute_force_topk(emb, q, "embedding", "vec_id", k=k),
+        approx,
+        keys=("query_id", "neighbor_id"),
+    )
+
+
 @_q(
     "ann_topk_ivf",
     # recall@5 of IVF(nprobe=4/16 cells) vs exact brute force — the
@@ -1363,13 +1390,8 @@ def q_ann_topk_ivf(spark, sf_dir):
     # pins (query, neighbor) agreement with the exact search.
     emb = _t(spark, sf_dir, "embeddings").df
     q = emb.filter(F.col("vec_id") < 5)
-    ivf = SIM.ivf_topk(emb, q, "embedding", "vec_id", k=5, num_cells=16, nprobe=4).select(
-        F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
-    )
-    bf = SIM.brute_force_topk(emb, q, "embedding", "vec_id", k=5).select(
-        F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
-    )
-    return DEDUP.pair_agreement(bf, ivf)
+    ivf = SIM.ivf_topk(emb, q, "embedding", "vec_id", k=5, num_cells=16, nprobe=4)
+    return _recall_at_k(emb, q, ivf, 5)
 
 
 @_q(
@@ -1399,11 +1421,8 @@ def q_ann_topk_ivf_kmeans(spark, sf_dir):
     q = emb.filter(F.col("vec_id") < 5)
     ivf = SIM.ivf_topk(
         emb, q, "embedding", "vec_id", k=5, num_cells=16, nprobe=4, train_iters=3
-    ).select(F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b"))
-    bf = SIM.brute_force_topk(emb, q, "embedding", "vec_id", k=5).select(
-        F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
     )
-    return DEDUP.pair_agreement(bf, ivf)
+    return _recall_at_k(emb, q, ivf, 5)
 
 
 def _ann_index_path(sf_dir: str) -> str:
@@ -1447,6 +1466,23 @@ def q_ann_index_build(spark, sf_dir):
     ).crossJoin(cents.agg(F.count(F.lit(1)).alias("n_centroids")))
 
 
+def _ivf_prebuilt_probe(spark, sf_dir, emb=None):
+    """ann_topk_ivf_prebuilt's product body: build the persisted index
+    if it is missing, then probe it with the 5 query vectors."""
+    import os
+
+    emb = _t(spark, sf_dir, "embeddings").df if emb is None else emb
+    path = _ann_index_path(sf_dir)
+    if not os.path.exists(f"{path}/assigned"):
+        SIM.ann_index_write(
+            emb, "embedding", "vec_id", path, num_cells=16, train_iters=3
+        )
+    return SIM.ivf_topk_prebuilt(
+        spark, path, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id",
+        k=5, nprobe=4,
+    )
+
+
 @_q(
     "ann_topk_ivf_prebuilt",
     # query-many half: probe the PERSISTED index (build-if-missing,
@@ -1469,22 +1505,9 @@ def q_ann_index_build(spark, sf_dir):
     """,
 )
 def q_ann_topk_ivf_prebuilt(spark, sf_dir):
-    import os
-
     emb = _t(spark, sf_dir, "embeddings").df
-    path = _ann_index_path(sf_dir)
-    if not os.path.exists(f"{path}/assigned"):
-        SIM.ann_index_write(
-            emb, "embedding", "vec_id", path, num_cells=16, train_iters=3
-        )
-    q = emb.filter(F.col("vec_id") < 5)
-    ivf = SIM.ivf_topk_prebuilt(
-        spark, path, q, "embedding", "vec_id", k=5, nprobe=4
-    ).select(F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b"))
-    bf = SIM.brute_force_topk(emb, q, "embedding", "vec_id", k=5).select(
-        F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
-    )
-    return DEDUP.pair_agreement(bf, ivf)
+    ivf = _ivf_prebuilt_probe(spark, sf_dir, emb)
+    return _recall_at_k(emb, emb.filter(F.col("vec_id") < 5), ivf, 5)
 
 
 # ONE snapshot oracle shared by ann_topk_ivfpq AND its prebuilt twin
@@ -1525,11 +1548,8 @@ def q_ann_topk_ivfpq(spark, sf_dir):
     ivfpq = SIM.ivfpq_topk(
         emb, q, "embedding", "vec_id", k=5, num_cells=16, nprobe=8,
         m=8, codebook_k=16, train_iters=2, overfetch=30,
-    ).select(F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b"))
-    bf = SIM.brute_force_topk(emb, q, "embedding", "vec_id", k=5).select(
-        F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
     )
-    return DEDUP.pair_agreement(bf, ivfpq)
+    return _recall_at_k(emb, q, ivfpq, 5)
 
 
 @_q(
@@ -1560,11 +1580,8 @@ def q_ann_topk_ivfpq_residual(spark, sf_dir):
     res = SIM.ivfpq_topk(
         emb, q, "embedding", "vec_id", k=5, num_cells=16, nprobe=8,
         m=8, codebook_k=16, train_iters=2, overfetch=30, by_residual=True,
-    ).select(F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b"))
-    bf = SIM.brute_force_topk(emb, q, "embedding", "vec_id", k=5).select(
-        F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
     )
-    return DEDUP.pair_agreement(bf, res)
+    return _recall_at_k(emb, q, res, 5)
 
 
 def _ivfpq_index_path(sf_dir: str) -> str:
@@ -1603,11 +1620,8 @@ def q_ann_topk_ivfpq_prebuilt(spark, sf_dir):
     q = emb.filter(F.col("vec_id") < 5)
     pre = SIM.ivfpq_topk_prebuilt(
         spark, path, q, "embedding", "vec_id", k=5, nprobe=8, overfetch=30
-    ).select(F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b"))
-    bf = SIM.brute_force_topk(emb, q, "embedding", "vec_id", k=5).select(
-        F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
     )
-    return DEDUP.pair_agreement(bf, pre)
+    return _recall_at_k(emb, q, pre, 5)
 
 
 def _hn_index_path(sf_dir: str) -> str:
@@ -1646,6 +1660,22 @@ _HN_SNAPSHOT_ORACLE = """
     """
 
 
+def _hn_prebuilt_probe(spark, sf_dir, emb=None):
+    """hard_negative_ivf_prebuilt's product body: build the persisted
+    labeled index if it is missing, then mine every corpus vector's
+    cross-label top-3 from it (no Lloyd retrain, no reassignment)."""
+    import os
+
+    emb = _t(spark, sf_dir, "embeddings").df if emb is None else emb
+    path = _hn_index_path(sf_dir)
+    if not os.path.exists(f"{path}/assigned"):
+        SIM.ann_index_write(
+            emb, "embedding", "vec_id", path, num_cells=4, train_iters=2,
+            train_mode="sample", extra_cols=("label",),
+        )
+    return SIM.hard_negative_ivf_prebuilt(spark, path, "label", k=3, nprobe=2)
+
+
 @_q(
     "hard_negative_ivf_prebuilt",
     # corpus-scale hard-negative mining against the PERSISTED index —
@@ -1660,24 +1690,14 @@ _HN_SNAPSHOT_ORACLE = """
     _HN_SNAPSHOT_ORACLE,
 )
 def q_hard_negative_ivf_prebuilt(spark, sf_dir):
-    import os
-
     emb = _t(spark, sf_dir, "embeddings").df
-    path = _hn_index_path(sf_dir)
-    if not os.path.exists(f"{path}/assigned"):
-        SIM.ann_index_write(
-            emb, "embedding", "vec_id", path, num_cells=4, train_iters=2,
-            train_mode="sample", extra_cols=("label",),
-        )
-    hv = SIM.hard_negative_ivf_prebuilt(spark, path, "label", k=3, nprobe=2)
-    hvp = hv.filter(F.col("query_id") < 25).select(
-        F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
-    )
-    q = emb.filter(F.col("vec_id") < 25)
+    hv = _hn_prebuilt_probe(spark, sf_dir, emb)
     bf = SIM.hard_negative_topk(
-        emb, q, "embedding", "vec_id", "label", k=3
-    ).select(F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b"))
-    return DEDUP.pair_agreement(bf, hvp)
+        emb, emb.filter(F.col("vec_id") < 25), "embedding", "vec_id", "label", k=3
+    )
+    return DEDUP.pair_agreement(
+        bf, hv.filter(F.col("query_id") < 25), keys=("query_id", "neighbor_id")
+    )
 
 
 @_q(
@@ -2488,6 +2508,17 @@ def q_window_range_frame(spark, sf_dir):
     ).select("o_orderkey", F.col("win_sum").cast("double").alias("win_sum"))
 
 
+def _lsh_probe(spark, sf_dir, emb=None):
+    """ann_topk_lsh's product body: hyperplane signatures (one Arrow
+    matmul stage, no corpus shuffle) -> broadcast bucket join -> exact
+    re-rank of the candidates of the 5 query vectors."""
+    emb = _t(spark, sf_dir, "embeddings").df if emb is None else emb
+    return SIM.lsh_topk(
+        emb, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id",
+        k=5, num_tables=16, num_planes=4, dim=64,
+    )
+
+
 @_q(
     "ann_topk_lsh",
     # recall@5 of sign-LSH (16 tables × 4 hyperplanes) vs exact brute
@@ -2506,18 +2537,9 @@ def q_window_range_frame(spark, sf_dir):
     """,
 )
 def q_ann_topk_lsh(spark, sf_dir):
-    # end-to-end: hyperplane signatures (one Arrow matmul stage, no
-    # corpus shuffle) -> broadcast bucket join -> exact re-rank of
-    # candidates, scored as recall@k against the exact neighbors
     emb = _t(spark, sf_dir, "embeddings").df
-    q = emb.filter(F.col("vec_id") < 5)
-    lsh = SIM.lsh_topk(
-        emb, q, "embedding", "vec_id", k=5, num_tables=16, num_planes=4, dim=64
-    ).select(F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b"))
-    bf = SIM.brute_force_topk(emb, q, "embedding", "vec_id", k=5).select(
-        F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
-    )
-    return DEDUP.pair_agreement(bf, lsh)
+    lsh = _lsh_probe(spark, sf_dir, emb)
+    return _recall_at_k(emb, emb.filter(F.col("vec_id") < 5), lsh, 5)
 
 
 # ---------------------------------------------------------------------------
@@ -2550,24 +2572,11 @@ def _events_stream(spark, sf_dir):
     )
 
 
-_CKPT_DIRS: list = []
-
-
-def _stream_ckpt(prefix: str) -> str:
-    """mkdtemp checkpoint dir registered for interpreter-exit cleanup
-    (ADVICE r8: repeated bench/verify runs were accumulating orphan
-    checkpoint dirs under /tmp)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix=prefix)
-    if not _CKPT_DIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _CKPT_DIRS]
-        )
-    _CKPT_DIRS.append(path)
-    return path
+# Memory sinks start without a checkpointLocation: Spark gives each
+# run a fresh temporary checkpoint and deletes it when the query stops
+# (a reused checkpoint would make availableNow see no new files while
+# the new sink table starts empty). foreachBatch sinks need a real
+# checkpoint; theirs comes from _private_dir.
 
 
 def _drain(q, timeout_sec: int = 120) -> None:
@@ -2593,19 +2602,16 @@ def _state_sized_start(spark, sf_dir, writer, table: str = "events"):
     restored immediately — batch queries on the session are
     untouched). Sized by input bytes, never by the local core count,
     so the driver's low-core bench sees the same rule."""
-    import os as _os
-
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    size = _os.path.getsize(f"{sf_dir}/{table}.parquet")
-    spark.conf.set(key, str(max(4, min(int(prev), size // (32 << 20) + 1))))
+    spark.conf.set(key, str(_stream_parts(spark, sf_dir, table)))
     try:
         return writer.start()
     finally:
         spark.conf.set(key, prev)
 
 
-def _stream_parts(spark, sf_dir) -> int:
+def _stream_parts(spark, sf_dir, table: str = "events") -> int:
     """State-store partition count sized to the bounded feed: one
     state partition per ~32 MB of input, clamped to [4, session
     shuffle partitions]. Each state partition is a store instance with
@@ -2613,7 +2619,7 @@ def _stream_parts(spark, sf_dir) -> int:
     on a big cluster grows back to the cluster default."""
     import os
 
-    size = os.path.getsize(f"{sf_dir}/events.parquet")
+    size = os.path.getsize(f"{sf_dir}/{table}.parquet")
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(4, min(cap, size // (32 << 20) + 1))
 
@@ -3137,11 +3143,6 @@ def q_streaming_dedup(spark, sf_dir):
         .dropDuplicates(["event_id", "tsc"])
         .select("event_id", "event_type")
     )
-    # fresh checkpoint per run (mkdtemp): a reused checkpoint makes
-    # availableNow see zero new files while the new memory-sink table
-    # starts empty — the run would return nothing
-    import tempfile
-
     # state stores sized to the bounded feed (dropDuplicates keeps
     # per-key state on every shuffle partition)
     q = _state_sized_start(
@@ -3150,11 +3151,7 @@ def q_streaming_dedup(spark, sf_dir):
         dedup.writeStream.format("memory")
         .queryName("pippin_stream_dedup")
         .outputMode("append")
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="pippin_ckpt_dedup_"),
-        ),
+        .trigger(availableNow=True),
     )
     _drain(q)
     return (
@@ -3181,8 +3178,6 @@ def q_streaming_dedup(spark, sf_dir):
     """,
 )
 def q_streaming_dedup_within_watermark(spark, sf_dir):
-    import tempfile
-
     s1 = _events_stream(spark, sf_dir)
     s2 = _events_stream(spark, sf_dir).withColumn(
         "tsc", F.col("tsc") + F.expr("INTERVAL 1 SECOND")
@@ -3199,11 +3194,7 @@ def q_streaming_dedup_within_watermark(spark, sf_dir):
         dedup.writeStream.format("memory")
         .queryName("pippin_stream_dedup_ww")
         .outputMode("append")
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="pippin_ckpt_dedup_ww_"),
-        ),
+        .trigger(availableNow=True),
     )
     _drain(q)
     return (
@@ -4536,8 +4527,6 @@ def q_dsir_select_docs(spark, sf_dir):
     _clf_score_oracle(),
 )
 def q_streaming_quality_gate(spark, sf_dir):
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents").df
     lab = CLF.stopword_rule_label(F.col("text"), list(CLF_STOPWORDS), 2)
     w = CLF.logreg_train(
@@ -4559,10 +4548,6 @@ def q_streaming_quality_gate(spark, sf_dir):
         .queryName("pippin_stream_qgate")
         .outputMode("append")
         .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="pippin_ckpt_qgate_"),
-        )
         .start()
     )
     _drain(q)
@@ -5226,13 +5211,14 @@ def q_streaming_foreach_upsert(spark, sf_dir):
         merged = merged.localCheckpoint(eager=True)
         merged.write.mode("overwrite").parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="pippin_ckpt_fbu_"))
-        .start()
-    )
-    _drain(q)
+    with _private_dir() as ckpt:
+        q = (
+            stream.writeStream.foreachBatch(upsert)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        _drain(q)
     return spark.read.parquet(out_dir).select(
         "user_id", F.col("value").alias("latest_value")
     )
@@ -6728,8 +6714,6 @@ def q_agg_count_min_events(spark, sf_dir):
     """,
 )
 def q_streaming_stream_stream_join(spark, sf_dir):
-    import tempfile
-
     purchases = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
@@ -6767,7 +6751,6 @@ def q_streaming_stream_stream_join(spark, sf_dir):
         output_mode="append",
         available_now=True,
         state_partitions=_stream_parts(spark, sf_dir),
-        checkpointLocation=tempfile.mkdtemp(prefix="pippin_ckpt_ssj_"),
     )
     _drain(q, 180)
     return spark.table("pippin_stream_stream_join")
@@ -9940,6 +9923,49 @@ def q_diversity_kcenter(spark, sf_dir):
     )
 
 
+def _minhash_matches(arriving, corpus):
+    """(stream_id, corpus_id) band collisions of the ``arriving`` docs
+    against the ``corpus`` docs' band store (64 hashes, 16 bands). A
+    stream-static join when ``arriving`` streams: no streaming state."""
+
+    def bands(df, id_name):
+        return DEDUP.text_minhash_signatures(
+            df, "text", n=3, num_hashes=64, bands=16, include_sig=False
+        ).select(
+            F.col("doc_id").alias(id_name),
+            F.posexplode("bands").alias("b_pos", "b_hash"),
+        )
+
+    store = bands(corpus, "corpus_id")
+    return bands(arriving, "stream_id").join(
+        F.broadcast(store), ["b_pos", "b_hash"]
+    ).select("stream_id", "corpus_id")
+
+
+def _stream_minhash_pairs(spark, sf_dir, docs=None):
+    """streaming_minhash_dedup's product body: the eval split streamed
+    through the MinHash ingest gate against the corpus split's band
+    store and drained. Band collisions are deduplicated on the drained
+    sink, which keeps the stream stateless."""
+    docs = _t(spark, sf_dir, "documents").df if docs is None else docs
+    stream = (
+        spark.readStream.schema(docs.schema)
+        .option("pathGlobFilter", "documents.parquet")
+        .parquet(sf_dir)
+        .filter(F.col("doc_id") % 10 >= 8)
+    )
+    q = (
+        _minhash_matches(stream, docs.filter(F.col("doc_id") % 10 < 8))
+        .writeStream.format("memory")
+        .queryName("pippin_stream_minhash")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    _drain(q)
+    return spark.table("pippin_stream_minhash").distinct()
+
+
 @_q(
     "streaming_minhash_dedup",
     # streaming near-dup INGEST filter: arriving docs (eval split) are
@@ -9970,60 +9996,26 @@ def q_diversity_kcenter(spark, sf_dir):
     """,
 )
 def q_streaming_minhash_dedup(spark, sf_dir):
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents").df
-    corpus = docs.filter(F.col("doc_id") % 10 < 8)
-    store = DEDUP.text_minhash_signatures(
-        corpus, "text", n=3, num_hashes=64, bands=16, include_sig=False
-    ).select(
-        F.col("doc_id").alias("corpus_id"),
-        F.posexplode("bands").alias("b_pos", "b_hash"),
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .filter(F.col("doc_id") % 10 >= 8)
-    )
-    sbands = DEDUP.text_minhash_signatures(
-        stream, "text", n=3, num_hashes=64, bands=16, include_sig=False
-    ).select(
-        F.col("doc_id").alias("stream_id"),
-        F.posexplode("bands").alias("b_pos", "b_hash"),
-    )
-    matched = sbands.join(F.broadcast(store), ["b_pos", "b_hash"]).select(
-        "stream_id", "corpus_id"
-    )
-    q = (
-        matched.writeStream.format("memory")
-        .queryName("pippin_stream_minhash")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="pippin_ckpt_minhash_"),
-        )
-        .start()
-    )
-    _drain(q)
-    drained = spark.table("pippin_stream_minhash").distinct()
+    drained = _stream_minhash_pairs(spark, sf_dir, docs)
     # ground truth: the identical banding computed batch-side — the
-    # stream must reproduce it exactly (the dedupe of band collisions
-    # happens here, on the drained sink, keeping the stream stateless)
-    eval_batch = docs.filter(F.col("doc_id") % 10 >= 8)
-    bbands = DEDUP.text_minhash_signatures(
-        eval_batch, "text", n=3, num_hashes=64, bands=16, include_sig=False
-    ).select(
-        F.col("doc_id").alias("stream_id"),
-        F.posexplode("bands").alias("b_pos", "b_hash"),
-    )
-    bpairs = (
-        bbands.join(F.broadcast(store), ["b_pos", "b_hash"])
-        .select("stream_id", "corpus_id")
-        .distinct()
-    )
+    # stream must reproduce it exactly
+    bpairs = _minhash_matches(
+        docs.filter(F.col("doc_id") % 10 >= 8), docs.filter(F.col("doc_id") % 10 < 8)
+    ).distinct()
     return DEDUP.pair_agreement(bpairs, drained, keys=("stream_id", "corpus_id"))
+
+
+def _pq_probe(spark, sf_dir, emb=None):
+    """ann_topk_pq's product body: per-subspace Lloyd codebooks ->
+    one-Arrow-pass encode + ADC table-lookup scan with per-batch
+    candidate pruning -> exact cosine re-rank of the 5 query vectors'
+    candidates."""
+    emb = _t(spark, sf_dir, "embeddings").df if emb is None else emb
+    return SIM.pq_topk(
+        emb, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id",
+        k=5, m=8, codebook_k=16, train_iters=2, overfetch=20,
+    )
 
 
 @_q(
@@ -10055,19 +10047,20 @@ def q_streaming_minhash_dedup(spark, sf_dir):
     """,
 )
 def q_ann_topk_pq(spark, sf_dir):
-    # end-to-end: per-subspace Lloyd codebooks -> one-Arrow-pass encode
-    # + ADC table-lookup scan with per-batch candidate pruning -> exact
-    # cosine re-rank, scored as recall@k against the exact neighbors
     emb = _t(spark, sf_dir, "embeddings").df
-    q = emb.filter(F.col("vec_id") < 5)
-    pq = SIM.pq_topk(
-        emb, q, "embedding", "vec_id",
-        k=5, m=8, codebook_k=16, train_iters=2, overfetch=20,
-    ).select(F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b"))
-    bf = SIM.brute_force_topk(emb, q, "embedding", "vec_id", k=5).select(
-        F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
+    pq = _pq_probe(spark, sf_dir, emb)
+    return _recall_at_k(emb, emb.filter(F.col("vec_id") < 5), pq, 5)
+
+
+def _knn_ivf(spark, sf_dir, emb=None):
+    """knn_join_ivf's product body: Lloyd-trained IVF build ->
+    multi-probe (nprobe=2) cell-routed chunked-numpy kNN -> exact JVM
+    re-rank, every corpus vector a query."""
+    emb = _t(spark, sf_dir, "embeddings").df if emb is None else emb
+    return SIM.knn_join_ivf(
+        emb, "embedding", "vec_id", k=3, num_cells=4, train_iters=2,
+        nprobe=2,
     )
-    return DEDUP.pair_agreement(bf, pq)
 
 
 @_q(
@@ -10105,26 +10098,20 @@ def q_ann_topk_pq(spark, sf_dir):
     """,
 )
 def q_knn_join_ivf(spark, sf_dir):
-    # end-to-end: Lloyd-trained IVF build -> multi-probe (nprobe=2)
-    # cell-routed chunked-numpy kNN -> exact JVM re-rank, scored as
-    # recall@k against the exact neighbor graph of the scored queries.
-    # nprobe=2 exercises the multi-probe path (VERDICT r4 #6); its
-    # pinned agreement counts are strictly >= the r4 nprobe=1 pins
-    # (45/42/36 of 75) by the monotonicity argument in knn_join_ivf's
-    # docstring, re-measured by tools/sketch_expected.py
+    # the product body scored as recall@k against the exact neighbor
+    # graph of the 25 scored queries. nprobe=2 exercises the
+    # multi-probe path (VERDICT r4 #6); its pinned agreement counts are
+    # strictly >= the r4 nprobe=1 pins (45/42/36 of 75) by the
+    # monotonicity argument in knn_join_ivf's docstring, re-measured by
+    # tools/sketch_expected.py
     emb = _t(spark, sf_dir, "embeddings").df
-    ivf = SIM.knn_join_ivf(
-        emb, "embedding", "vec_id", k=3, num_cells=4, train_iters=2,
-        nprobe=2,
+    ivf = _knn_ivf(spark, sf_dir, emb).filter(F.col("id") < 25)
+    return _recall_at_k(
+        emb,
+        emb.filter(F.col("vec_id") < 25),
+        ivf.select(F.col("id").alias("query_id"), "neighbor_id"),
+        3,
     )
-    ivfp = ivf.filter(F.col("id") < 25).select(
-        F.col("id").alias("id_a"), F.col("neighbor_id").alias("id_b")
-    )
-    q = emb.filter(F.col("vec_id") < 25)
-    bf = SIM.brute_force_topk(emb, q, "embedding", "vec_id", k=3).select(
-        F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
-    )
-    return DEDUP.pair_agreement(bf, ivfp)
 
 
 @_q(
@@ -10154,14 +10141,12 @@ def q_hard_negative_ivf(spark, sf_dir):
         emb, "embedding", "vec_id", "label",
         k=3, num_cells=4, train_iters=2, nprobe=2,
     )
-    hvp = hv.filter(F.col("query_id") < 25).select(
-        F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
-    )
-    q = emb.filter(F.col("vec_id") < 25)
     bf = SIM.hard_negative_topk(
-        emb, q, "embedding", "vec_id", "label", k=3
-    ).select(F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b"))
-    return DEDUP.pair_agreement(bf, hvp)
+        emb, emb.filter(F.col("vec_id") < 25), "embedding", "vec_id", "label", k=3
+    )
+    return DEDUP.pair_agreement(
+        bf, hv.filter(F.col("query_id") < 25), keys=("query_id", "neighbor_id")
+    )
 
 
 @_q(
@@ -10976,8 +10961,6 @@ def q_incremental_release_e2e(spark, sf_dir):
     TXT.corpus_manifest_oracle_sql("documents", "text", "doc_id", 64),
 )
 def q_streaming_corpus_manifest(spark, sf_dir):
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents").df
     stream = (
         spark.readStream.schema(docs.schema)
@@ -10985,29 +10968,17 @@ def q_streaming_corpus_manifest(spark, sf_dir):
         .parquet(sf_dir)
     )
     man = TXT.corpus_manifest(stream, "text", "doc_id", num_buckets=64)
-    # size the stateful agg's state stores to the bounded feed (the
-    # _stream_parts rationale — see streaming_ivf_cell_route); the
-    # per-bucket manifest rows are partition-invariant
-    import os as _os
-
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    size = _os.path.getsize(f"{sf_dir}/documents.parquet")
-    spark.conf.set(key, str(max(4, min(int(prev), size // (32 << 20) + 1))))
-    try:
-        q = (
-            man.writeStream.format("memory")
-            .queryName("pippin_stream_manifest")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="pippin_ckpt_manifest_"),
-            )
-            .start()
-        )
-    finally:
-        spark.conf.set(key, prev)
+    # state stores sized to the bounded feed; the per-bucket manifest
+    # rows are partition-invariant
+    q = _state_sized_start(
+        spark,
+        sf_dir,
+        man.writeStream.format("memory")
+        .queryName("pippin_stream_manifest")
+        .outputMode("complete")
+        .trigger(availableNow=True),
+        table="documents",
+    )
     _drain(q)
     return spark.table("pippin_stream_manifest")
 
@@ -12016,26 +11987,17 @@ def q_streaming_ivf_cell_route(spark, sf_dir):
         cents,
     )
     agg = routed.groupBy("cell").agg(F.count(F.lit(1)).alias("n_s"))
-    # size the stateful agg's state-store partitioning to the bounded
-    # feed, like every streaming-module row (_stream_parts rationale:
-    # each state partition is a store instance with per-batch
-    # open/commit cost); pinned into the offset log at start, restored
-    # after — the per-cell counts are partition-invariant
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    size = os.path.getsize(f"{sf_dir}/embeddings.parquet")
-    spark.conf.set(key, str(max(4, min(int(prev), size // (32 << 20) + 1))))
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("pippin_stream_ivf_route")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _stream_ckpt("pippin_ckpt_ivfroute_"))
-            .start()
-        )
-    finally:
-        spark.conf.set(key, prev)
+    # state stores sized to the bounded feed; the per-cell counts are
+    # partition-invariant
+    q = _state_sized_start(
+        spark,
+        sf_dir,
+        agg.writeStream.format("memory")
+        .queryName("pippin_stream_ivf_route")
+        .outputMode("complete")
+        .trigger(availableNow=True),
+        table="embeddings",
+    )
     _drain(q)
     sc = spark.table("pippin_stream_ivf_route")
     bc = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n_b"))
@@ -12056,13 +12018,13 @@ def q_streaming_ivf_cell_route(spark, sf_dir):
 
 @contextmanager
 def _private_dir():
-    """A fresh directory for one invocation's index artifacts, removed
-    on exit: concurrent or repeated runs never share an index path, and
-    a rerun never appends to a previous run's index."""
+    """A fresh directory for one invocation's index artifacts or stream
+    checkpoint, removed on exit: concurrent or repeated runs never
+    share a path, and a rerun never appends to a previous run's index."""
     import shutil
     import tempfile
 
-    path = tempfile.mkdtemp(prefix="pippin_maint_ivf_")
+    path = tempfile.mkdtemp(prefix="pippin_private_")
     try:
         yield path
     finally:
@@ -12204,7 +12166,8 @@ def _maint_frames(spark, sf_dir):
 def _maint_stream_append(spark, sf_dir, emb, path: str) -> None:
     """The ingest half: the remaining 20% streamed through foreachBatch
     into ann_index_append (streaming_ivf_cell_route's assignment driven
-    into the live index)."""
+    into the live index). The stream's checkpoint sits beside ``path``,
+    in the cycle's run-private directory."""
     stream = (
         spark.readStream.schema(emb.schema)
         .option("pathGlobFilter", "embeddings.parquet")
@@ -12218,7 +12181,7 @@ def _maint_stream_append(spark, sf_dir, emb, path: str) -> None:
             )
         )
         .trigger(availableNow=True)
-        .option("checkpointLocation", _stream_ckpt("pippin_ckpt_maint_"))
+        .option("checkpointLocation", f"{path}_ckpt")
         .start()
     )
     _drain(q)

@@ -162,30 +162,6 @@ def shingles(text_col: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-_LONG_MAX = (1 << 63) - 1
-
-
-def minhash_signature_hof(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature as a single native fold: each shingle string is
-    xxhash64'd ONCE, then the ``num_hashes`` permutations are derived
-    from that 8-byte base hash (xxhash64(base, seed_j)). Pure Column
-    expression — usable anywhere a Column is — but Spark evaluates
-    higher-order-function lambdas INTERPRETED (no codegen), ~40ms/doc
-    for 64 hashes: fine for ad-hoc use, wrong for a corpus pass. The
-    corpus path is :func:`minhash_signatures` (vectorized Arrow UDF)."""
-    seeds = F.array(*[F.lit(j) for j in range(1, num_hashes + 1)])
-    base = F.transform(shingle_col, lambda s: F.xxhash64(s))
-    return F.aggregate(
-        base,
-        F.array_repeat(F.lit(_LONG_MAX).cast("long"), num_hashes),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(seeds, lambda j: F.xxhash64(h, j)),
-            lambda a, b: F.least(a, b),
-        ),
-    )
-
-
 def _shingle_hash_fn(n: int):
     """Build the per-text shingle hasher used inside the Arrow UDFs:
     text → unique uint64 n-gram hashes. Token md5s are cached for the
@@ -920,36 +896,6 @@ def simhash_signatures(df: DataFrame, text_col: str, out_col: str = "sig") -> Da
 
     sh = sh.asNondeterministic()  # see minhash_signatures: prevents double eval
     return df.withColumn(out_col, sh(text_col))
-
-
-def simhash(text_col: Column, bits: int = 64) -> Column:
-    """SimHash signature as a long: per bit b, sum ±1 over token hashes;
-    bit set iff the sum is positive. One fold over the token-hash array
-    carrying an array of ``bits`` vote counters (zip_with against a
-    literal bit-mask array), then one fold to assemble the signature —
-    the tokenize+hash expression is evaluated exactly once per row.
-    Pure-Column variant; the corpus path is :func:`simhash_signatures`
-    (HOF lambdas are interpreted, not codegen'd — see minhash notes)."""
-    toks = F.array_distinct(F.split(F.trim(F.regexp_replace(F.lower(text_col), "\\s+", " ")), " "))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    # bit b ↦ mask 1<<b as a SIGNED long literal (bit 63 = Long.MIN)
-    masks = F.array(
-        *[F.lit((1 << b) if b < bits - 1 else -(1 << (bits - 1))).cast("long") for b in range(bits)]
-    )
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(masks, lambda m: F.when(h.bitwiseAND(m) != 0, F.lit(1)).otherwise(F.lit(-1))),
-            lambda a, v: a + v.cast("long"),
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(votes, masks, lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"),
-        lambda a, m: a.bitwiseOR(m),
-    )
 
 
 def _popcount64(x):

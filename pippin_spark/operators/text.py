@@ -108,47 +108,6 @@ def word_ngrams(col: Column, n: int = 2) -> Column:
     )
 
 
-def top_ngram_count(col: Column, n: int = 2) -> Column:
-    """Occurrence count of the most frequent word n-gram in the text
-    (0 when the text has fewer than n tokens). Computed entirely in
-    expression land: distinct grams × membership counts — O(d·g) per
-    document, JVM-side, zero shuffle.
-
-    NOTE: referencing this from several output columns re-expands the
-    whole expression tree per reference (Catalyst has no cross-column
-    CSE for lambda trees) — for multi-metric scans use
-    ``repetition_stats``, which stages each intermediate in its own
-    projection so it is evaluated once."""
-    grams = word_ngrams(col, n)
-    counts = F.transform(
-        F.array_distinct(grams),
-        lambda d: F.size(F.filter(grams, lambda b: b == d)),
-    )
-    return F.coalesce(F.array_max(counts), F.lit(0))
-
-
-def top_ngram_fraction(col: Column, n: int = 2) -> Column:
-    """Gopher-style repetition signal: fraction of token positions
-    covered by the single most frequent word n-gram,
-    ``n * top_count / n_tokens`` (0 for short texts). High values flag
-    boilerplate/spam documents for corpus filtering."""
-    frac = (top_ngram_count(col, n) * n).cast("double") / token_count(col).cast(
-        "double"
-    )
-    return F.round(F.least(frac, F.lit(1.0)), 6)
-
-
-def type_token_ratio(col: Column) -> Column:
-    """Lexical diversity: distinct tokens / total tokens (rounded to 6
-    decimals). Low values flag repetitive machine-generated text."""
-    toks = tokens(col)
-    return F.round(
-        F.size(F.array_distinct(toks)).cast("double")
-        / F.greatest(F.size(toks), F.lit(1)).cast("double"),
-        6,
-    )
-
-
 def repetition_stats(df, text_col: str, id_cols=("doc_id",), n: int = 2):
     """Per-document repetition metrics: ``top{n}_frac`` (fraction of
     token positions covered by the most frequent word n-gram, Gopher

@@ -114,13 +114,22 @@ def test_driver_row_priority_is_exhaustive():
     assert len(_DRIVER_ROW_PRIORITY) == len(listed), "duplicate slots"
 
 
-def test_bench_headline_selection_is_exhaustive():
+def test_bench_headline_selection_is_exhaustive(monkeypatch):
     """Every registered query must be either in bench.py's HEADLINE
     set or matched by a named exclusion rule (stream-rig-dominated /
     IO-API round-trip / build-once artifact / variant of a timed
     family representative) — adding a query without deciding its
-    benchmark status must fail loudly (VERDICT r9 #7)."""
+    benchmark status must fail loudly (VERDICT r9 #7). A product-body
+    override of a row the bench never times is dead code and must
+    fail the same check."""
     import bench
     from pippin_spark.entry_queries import ENTRY_QUERIES
 
     bench.check_headline_coverage(ENTRY_QUERIES)
+    # stray override: ann_topk_ivf is a HEADLINE_VARIANT_OF exclusion
+    assert "ann_topk_ivf" in bench.HEADLINE_VARIANT_OF
+    monkeypatch.setitem(
+        bench.PRODUCT_BODY, "ann_topk_ivf", ENTRY_QUERIES["ann_topk_ivf"]
+    )
+    with pytest.raises(AssertionError, match="ann_topk_ivf"):
+        bench.check_headline_coverage(ENTRY_QUERIES)

@@ -136,15 +136,13 @@ def test_stream_interrupt_while_flowing(spark):
     assert spark.table("t_rate_flowing").count() == n1 >= rows_before
 
 
-def test_foreach_batch_upsert_sink(spark, feed_dir):
+def test_foreach_batch_upsert_sink(spark, feed_dir, tmp_path):
     # foreachBatch: the escape hatch for sinks Structured Streaming
     # lacks natively (MERGE/upsert into a keyed store). Each micro-batch
     # upserts latest-value-per-user into a parquet "table"; after the
     # bounded run drains, the table must hold exactly the per-key latest
     # values — the streaming analog of merge_changes.
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix="pippin_upsert_")
+    out_dir = str(tmp_path / "out")
     stream = spark.readStream.schema(SCHEMA).parquet(feed_dir)
 
     def upsert(batch_df, batch_id):
@@ -173,7 +171,7 @@ def test_foreach_batch_upsert_sink(spark, feed_dir):
     q = (
         stream.writeStream.foreachBatch(upsert)
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="pippin_ckpt_fb_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.awaitTermination(120)
@@ -181,21 +179,16 @@ def test_foreach_batch_upsert_sink(spark, feed_dir):
     assert final == {1: 2.0, 2: 4.0}  # latest per user
 
 
-def test_checkpoint_restart_processes_only_new_files(spark):
+def test_checkpoint_restart_processes_only_new_files(spark, tmp_path):
     # exactly-once across restarts: a second run from the SAME
     # checkpoint must process only files added since the first run —
     # the offset log, not the sink, is the source of truth
-    import tempfile
-
-    feed = tempfile.mkdtemp(prefix="pippin_feed_ckpt_")
-    ckpt = tempfile.mkdtemp(prefix="pippin_ckpt_restart_")
+    feed, ckpt, out = (str(tmp_path / d) for d in ("feed", "ckpt", "out"))
 
     def write_batch(ids):
         spark.createDataFrame([(i,) for i in ids], "id long").coalesce(1).write.mode(
             "append"
         ).parquet(feed)
-
-    out = tempfile.mkdtemp(prefix="pippin_ckpt_out_")
 
     def run_once():
         stream = spark.readStream.schema("id long").parquet(feed)
@@ -274,3 +267,29 @@ def test_tws_running_agg_matches_batch(spark, sf_dir):
         .collect()
     }
     assert got == exact
+
+
+def test_declared_streams_leave_no_temp_dirs(spark, sf_dir):
+    # memory sinks run on Spark's own temporary checkpoint and
+    # foreachBatch sinks on a private directory removed after the
+    # drain: repeated runs leave nothing under the temp dir. One warm
+    # run first builds the shared persisted index the route query
+    # probes (a cache kept on purpose, not a leak)
+    import os
+
+    from pippin_spark.entry_queries import ENTRY_QUERIES
+
+    names = ("streaming_dedup", "streaming_ivf_cell_route")
+    for n in names:
+        ENTRY_QUERIES[n](spark, sf_dir).collect()
+
+    def pippin_entries():
+        return {
+            e for e in os.listdir(tempfile.gettempdir()) if e.startswith("pippin_")
+        }
+
+    before = pippin_entries()
+    for _ in range(2):
+        for n in names:
+            ENTRY_QUERIES[n](spark, sf_dir).collect()
+    assert pippin_entries() - before == set()

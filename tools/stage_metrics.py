@@ -33,37 +33,20 @@ def main() -> None:
     log_dir = tempfile.mkdtemp(prefix="pippin_eventlog_")
 
     os.environ.setdefault("PIPPIN_DRIVER_MEM", "16g")
-    from pyspark.sql import SparkSession
-
-    from pippin_spark.session import get_spark  # noqa: F401 (config parity)
-
-    # replicate get_spark's configs + event logging (get_spark has no
-    # extra-config hook; keep the two lists in sync with session.py)
-    builder = (
-        SparkSession.builder.appName(f"pippin-stage-metrics-{name}")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.default.parallelism", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("PIPPIN_INITIAL_PARTITIONS", "512"),
-        )
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("PIPPIN_DRIVER_MEM", "16g"))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", log_dir)
-        # Spark 4 zstd-compresses event logs by default; keep them
-        # plain so the parse below needs no codec
-        .config("spark.eventLog.compress", "false")
+    # the session is get_spark's; spark-submit conf only adds the event
+    # log. Spark 4 zstd-compresses event logs by default; keep them
+    # plain so the parse below needs no codec
+    conf = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": log_dir,
+        "spark.eventLog.compress": "false",
+    }
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        " ".join(f"--conf {k}={v}" for k, v in conf.items()) + " pyspark-shell"
     )
-    spark = builder.getOrCreate()
+    from pippin_spark.session import get_spark
+
+    spark = get_spark(f"pippin-stage-metrics-{name}", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     from pippin_spark.entry_queries import ENTRY_QUERIES
