@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pippin_spark.functions import safe_cast, two_level_sums
 from pyspark.sql import types as T
 
-from pippin_spark.operators.util import local_table
+from pippin_spark.operators.util import bounded_collect, local_table
 from pippin_spark.pipeline import Pipeline
 
 ENTRY_QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -8893,8 +8893,8 @@ def q_recursive_cte_reach(spark, sf_dir):
         )
         .distinct()
     )
-    rows = edges_df.limit(_REACH_EDGES_MAX + 1).collect()
-    if len(rows) <= _REACH_EDGES_MAX:
+    rows = bounded_collect(edges_df, _REACH_EDGES_MAX)
+    if rows is not None:
         adj: dict = {}
         for r in rows:
             adj.setdefault(r["src"], set()).add(r["dst"])
@@ -12318,9 +12318,10 @@ def _clustered_embeddings(df_ids, salt: int, id_offset: int = 0, spread: bool = 
     idle). Only vec_id longs cross the spread exchange; per-row output
     is a pure function of (vec_id, salt), so results are unchanged.
     ``spread=False`` skips it for driver-tiny id sets (e.g. the 5-row
-    probe-query frame: the prebuilt probes iterate queries with
-    toLocalIterator, which submits one job PER PARTITION — spreading 5
-    rows over 32 partitions costs 31 empty jobs)."""
+    probe-query frame: ivfpq_topk_prebuilt brings its queries to the
+    driver with a bounded collect, which scans a spread frame's
+    partitions in several scale-up jobs where one partition takes
+    one)."""
     from pippin_spark.operators.util import ensure_parallelism
 
     def gen(batches):

@@ -16,7 +16,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pippin_spark.operators.util import local_table
+from pippin_spark.operators.util import bounded_collect, local_table
 
 # Row bound under which exact_kth_2pass selects on one bounded collect
 # (a few MB of scalars) instead of the two histogram passes; above it
@@ -1164,10 +1164,8 @@ def exact_kth_2pass(
     never core-count-sized.
     """
     v = F.col(value_col)
-    probe = (
-        df.select(v.alias("__v__")).limit(_KTH_LOCAL_MAX + 1).collect()
-    )
-    if len(probe) <= _KTH_LOCAL_MAX:
+    probe = bounded_collect(df.select(v.alias("__v__")), _KTH_LOCAL_MAX)
+    if probe is not None:
         spark = df.sparkSession
         vt = df.schema[value_col].dataType.simpleString()
         if not probe:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from pippin_spark.operators.dedup import cosine_similarity
 from pippin_spark.operators.util import (
+    bounded_collect,
     ensure_parallelism,
     local_table,
     sidecar_parquet_rows,
@@ -54,18 +55,37 @@ def brute_force_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
     )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-        )
+    return _rank_by_cosine(
+        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k
     )
-    w = Window.partitionBy("query_id").orderBy(
+
+
+def _rank_by_cosine(
+    pairs: DataFrame,
+    k: int,
+    by: str = "query_id",
+    qv="qv",
+    cv="cv",
+    keep=(),
+) -> DataFrame:
+    """The ranked-output contract of every cosine top-k operator:
+    ``pairs`` (``by``, neighbor_id, ``qv``, ``cv``, *``keep``) scored by
+    the exact JVM sequential-fold cosine rounded to 6, ranked per
+    (``by``, *``keep``) by (cosine DESC, neighbor_id ASC), ranks 1..k.
+    ``qv``/``cv`` are column names or Columns.
+    Returns (``by``, neighbor_id, cosine, *``keep``, rank)."""
+    scored = pairs.select(
+        by,
+        "neighbor_id",
+        F.round(cosine_similarity(qv, cv), 6).alias("cosine"),
+        *keep,
+    )
+    w = Window.partitionBy(by, *keep).orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
 
 
 def hard_negative_topk(
@@ -126,16 +146,15 @@ def hard_negative_topk(
             f"mode must be 'cross', 'same' or 'both', got {mode!r}"
         )
 
-    q_rows = (
+    q_rows = bounded_collect(
         queries.select(
             F.col(id_col).alias("query_id"),
             F.col(label_col).alias("__qlab__"),
             _as_double(F.col(vec_col)).alias("qv"),
-        )
-        .limit(max_queries + 1)
-        .collect()
+        ),
+        max_queries,
     )
-    if len(q_rows) > max_queries:
+    if q_rows is None:
         raise ValueError(
             f"hard_negative_topk: anchor set exceeds max_queries="
             f"{max_queries}; hash-sample the anchors or route through "
@@ -253,21 +272,10 @@ def hard_negative_topk(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
     )
     role_cols = ["role"] if mode == "both" else []
-    scored = (
-        cands.join(F.broadcast(qv), "query_id")
-        .join(nb, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-            *role_cols,
-        )
-    )
-    w = Window.partitionBy("query_id", *role_cols).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    ranked = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    ranked = _rank_by_cosine(
+        cands.join(F.broadcast(qv), "query_id").join(nb, "neighbor_id"),
+        k,
+        keep=role_cols,
     )
     # the Arrow stage emits long ids; cast back to the input id types
     # so empty- and non-empty-anchor results share one schema
@@ -590,10 +598,9 @@ def kmeans_centroids(
     # bounded-collect probe: all rows when the corpus is small (the
     # local-training shape — see _kmeans_local), an early-stopped
     # partial take when it is not
-    probe = proj.limit(_KMEANS_LOCAL_MAX + 1).collect()
-    if len(probe) <= _KMEANS_LOCAL_MAX:
+    probe = bounded_collect(proj, _KMEANS_LOCAL_MAX)
+    if probe is not None:
         return _kmeans_local(spark, probe, num_cells, iters, metric)
-    del probe
     vecs = ensure_parallelism(proj).persist()
     try:
         seed_rows = (
@@ -886,19 +893,12 @@ def _ivf_probe(
     if prune_cells:
         cells = sorted({int(r["cell"]) for r in probes.select("cell").collect()})
         assigned = assigned.filter(F.col("cell").isin(cells))
-    scored = (
+    return _rank_by_cosine(
         assigned.join(F.broadcast(probes), on="cell")
         .filter(F.col("id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-        )
+        .withColumnRenamed("id", "neighbor_id"),
+        k,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 # driver-writer for the index sidecars (centroids, codebooks, the
@@ -1202,14 +1202,15 @@ def _fused_train_rows(frame, vec_col, id_col):
     nrm = F.sqrt(
         F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
     )
-    rows = (
-        frame.select(F.col(id_col).alias("id"), v.alias("cv"), nrm.alias("nrm"))
-        .limit(_KMEANS_LOCAL_MAX + 1)
-        .collect()
+    return (
+        bounded_collect(
+            frame.select(
+                F.col(id_col).alias("id"), v.alias("cv"), nrm.alias("nrm")
+            ),
+            _KMEANS_LOCAL_MAX,
+        )
+        or None
     )
-    if not rows or len(rows) > _KMEANS_LOCAL_MAX:
-        return None
-    return rows
 
 
 def _fused_pq_sample(rows, cap: int):
@@ -1217,7 +1218,8 @@ def _fused_pq_sample(rows, cap: int):
     driver from _fused_train_rows' output: ascending-id order, capped,
     each vector divided by its JVM-computed norm (identical IEEE
     division; zero-norm rows pass through raw, normalize_vectors'
-    guard)."""
+    ``nrm > 0`` guard, which Spark's NaN ordering — NaN above every
+    number — makes true for a NaN norm)."""
     import numpy as np
 
     rows = sorted(rows, key=lambda r: r["id"])[:cap]
@@ -1225,7 +1227,7 @@ def _fused_pq_sample(rows, cap: int):
     for i, r in enumerate(rows):
         v = np.asarray(r["cv"], dtype=np.float64)
         n = r["nrm"]
-        out[i] = v / n if n and n > 0.0 else v
+        out[i] = v / n if n is not None and not n <= 0.0 else v
     return out
 
 
@@ -1324,15 +1326,47 @@ def pq_codebooks_residual(
     return books
 
 
+def _pq_encoder(books):
+    """The PQ encode rule over ``books``, one definition for every
+    encoder (the codes pq_encode_codes persists and the codes the ADC
+    scan encodes in flight). ``encode(V, centers=None)`` unit-normalizes
+    each row of V (zero rows stay zero), subtracts its ``centers`` row
+    when given (residual encoding), then per subspace takes the
+    argmin-L2 codeword (numpy first-min = lowest codeword id on ties);
+    it returns (codes (n, m) int64, qerr (n,) — the squared-L2
+    reconstruction error summed over subspaces). A nested function, so
+    an Arrow closure ships it by value and executors never import this
+    package."""
+    m, _, d = books.shape
+
+    def encode(V, centers=None):
+        import numpy as np
+
+        vn = np.linalg.norm(V, axis=1)
+        vn[vn == 0.0] = 1.0
+        R = V / vn[:, None]
+        if centers is not None:
+            R = R - centers
+        R = R.reshape(len(V), m, d)
+        codes = np.empty((len(V), m), dtype=np.int64)
+        qerr = np.zeros(len(V), dtype=np.float64)
+        for s in range(m):
+            dist = ((R[:, s, None, :] - books[None, s]) ** 2).sum(axis=2)
+            codes[:, s] = np.argmin(dist, axis=1)
+            qerr += dist[np.arange(len(V)), codes[:, s]]
+        return codes, qerr
+
+    return encode
+
+
 def pq_encode_codes(
     vectors: DataFrame, books, resid=None, with_error: bool = False
 ) -> DataFrame:
     """Add a ``codes array<int>`` column: per subspace, the argmin-L2
-    codeword of the UNIT-NORMALIZED subvector (numpy first-min ties —
-    the exact encode rule of pq_topk's scan, factored out so an index
-    can persist the codes once instead of re-encoding per query). One
-    Arrow pass, zero shuffle; the codebook ndarray ships in the
-    closure (m·k·d doubles).
+    codeword of the UNIT-NORMALIZED subvector (_pq_encoder — the encode
+    rule of pq_topk's scan, so an index can persist the codes once
+    instead of re-encoding per query). One Arrow pass, zero shuffle;
+    the codebook ndarray ships in the closure (m·k·d doubles).
 
     ``resid=(cell_ids, Cn)`` switches to RESIDUAL encoding: the row's
     normalized cell centroid (the ``cell`` column must be present) is
@@ -1351,7 +1385,7 @@ def pq_encode_codes(
     ) + ", codes array<int>"
     if with_error:
         schema += ", qerr double"
-    mm, _kk, d = books.shape
+    encode = _pq_encoder(books)
 
     def enc(batches):
         import numpy as _np
@@ -1359,22 +1393,13 @@ def pq_encode_codes(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = _np.stack(pdf["cv"].to_numpy()).astype(_np.float64)
-            vn = _np.linalg.norm(V, axis=1)
-            vn[vn == 0.0] = 1.0
-            Vn = V / vn[:, None]
+            centers = None
             if resid is not None:
                 cell_ids, Cn = resid
-                cpos = _np.searchsorted(cell_ids, pdf["cell"].to_numpy())
-                Vn = Vn - Cn[cpos]
-            Vn = Vn.reshape(len(V), mm, d)
-            codes = _np.empty((len(V), mm), dtype=_np.int64)
-            qerr = _np.zeros(len(V), dtype=_np.float64)
-            for s in range(mm):
-                dist = ((Vn[:, s, None, :] - books[None, s]) ** 2).sum(axis=2)
-                codes[:, s] = _np.argmin(dist, axis=1)
-                if with_error:
-                    qerr += dist[_np.arange(len(V)), codes[:, s]]
+                centers = Cn[_np.searchsorted(cell_ids, pdf["cell"].to_numpy())]
+            codes, qerr = encode(
+                _np.stack(pdf["cv"].to_numpy()).astype(_np.float64), centers
+            )
             pdf = pdf.copy()
             pdf["codes"] = [
                 [int(x) for x in row] for row in codes
@@ -2101,15 +2126,7 @@ def lsh_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.first("qv").alias("qv"), F.first("cv").alias("cv"))
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_by_cosine(cand, k)
 
 
 def kcenter_select(
@@ -2436,25 +2453,12 @@ def knn_join_blocked(
     b = vecs.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__vb__")
     )
-    scored = (
-        cands.join(a, "id")
-        .join(b, "neighbor_id")
-        .select(
-            "id",
-            "neighbor_id",
-            F.round(
-                cosine_similarity(
-                    F.col("__va__").cast("array<double>"),
-                    F.col("__vb__").cast("array<double>"),
-                ),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _rank_by_cosine(
+        cands.join(a, "id").join(b, "neighbor_id"),
+        k,
+        by="id",
+        qv=F.col("__va__").cast("array<double>"),
+        cv=F.col("__vb__").cast("array<double>"),
     )
 
 
@@ -2692,20 +2696,12 @@ def knn_join_ivf(
     b = rerank.select(
         F.col("id").alias("neighbor_id"), F.col("cv").alias("__vb__")
     )
-    scored = (
-        cands.join(a, "id")
-        .join(b, "neighbor_id")
-        .select(
-            "id",
-            "neighbor_id",
-            F.round(
-                cosine_similarity(F.col("__va__"), F.col("__vb__")), 6
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _rank_by_cosine(
+        cands.join(a, "id").join(b, "neighbor_id"),
+        k,
+        by="id",
+        qv="__va__",
+        cv="__vb__",
     )
 
 
@@ -2804,163 +2800,31 @@ def pq_topk(
     id ASC) tie-break: output shape matches brute_force_topk.
 
     Query-set regime: ADC search ships per-query distance tables to
-    the executors, so the query side is streamed to the driver in
-    ``query_chunk``-sized slices (toLocalIterator — driver peak is one
-    chunk, and each chunk's closure carries only its own tables) and
-    the per-chunk results are unioned: queries are independent, so
-    chunking is exact, at the cost of one corpus scan per chunk.
-    ``max_queries`` (default 256k ≈ 128 MB of 64-dim doubles) is the
-    documented guard against pointing the PROBE-workload operator at a
-    corpus-sized query set — past it, raise and use knn_join_ivf /
-    knn_join_blocked, whose corpus-to-corpus shape never stages
-    queries through the driver.
+    the executors, so the query side is collected to the driver (one
+    bounded collect, guarded by ``max_queries``) and probed in
+    ``query_chunk``-sized slices whose results are unioned (see
+    _adc_topk): queries are independent, so chunking is exact, at the
+    cost of one corpus scan per chunk; it bounds each scan task's
+    closure to one chunk's tables. ``max_queries`` (default 256k ≈
+    128 MB of 64-dim doubles) is the documented guard against
+    pointing the PROBE-workload operator at a corpus-sized query set —
+    past it, raise and use knn_join_ivf / knn_join_blocked, whose
+    corpus-to-corpus shape never stages queries through the driver.
 
     Scale: codebooks/tables are closure-shipped constants (m·k·d
     doubles per chunk); the corpus shuffles NOTHING — the only moved
     rows are ~batches·|chunk|·(k+overfetch) candidate ids; recall
     tunes with m (down) / codebook_k / overfetch (up), scored by the
     same recall-oracle pattern as IVF/LSH."""
-    import numpy as np
-
     books = pq_codebooks(
         corpus, vec_col, id_col, m, codebook_k, train_iters, train_mod
     )
-    nk = int(k + overfetch)
     c = corpus.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("cv")
     )
-    spark = corpus.sparkSession
-    chunk_results: list[DataFrame] = []
-    buf_ids: list[int] = []
-    buf_vecs: list = []
-
-    def flush() -> None:
-        q_ids = np.array(buf_ids, dtype=np.int64)
-        Q = np.stack(buf_vecs)
-        chunk_results.append(
-            _pq_topk_chunk(c, spark, q_ids, Q, books, k, nk)
-        )
-        buf_ids.clear()
-        buf_vecs.clear()
-
-    n_seen = 0
-    for r in queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).toLocalIterator(prefetchPartitions=True):
-        n_seen += 1
-        if n_seen > max_queries:
-            raise ValueError(
-                f"pq_topk: query set exceeds max_queries={max_queries}; "
-                "this is the ANN-probe operator — for corpus-sized query "
-                "sets use knn_join_ivf / knn_join_blocked"
-            )
-        buf_ids.append(r["query_id"])
-        buf_vecs.append(np.asarray(r["qv"], dtype=np.float64))
-        if len(buf_ids) >= query_chunk:
-            flush()
-    if buf_ids:
-        flush()
-    if not chunk_results:
-        raise ValueError("pq_topk: empty query set")
-    out = chunk_results[0]
-    for part in chunk_results[1:]:
-        out = out.unionByName(part)
-    return out
-
-
-def _pq_topk_chunk(c, spark, q_ids, Q, books, k: int, nk: int) -> DataFrame:
-    """One pq_topk query chunk: ADC scan + batch pruning + exact
-    re-rank for the (q_ids, Q) slice. A single-chunk call is plan-
-    identical to the pre-chunking pq_topk (hash-stability contract)."""
-    import numpy as np
-
-    d = books.shape[2]
-    norms = np.linalg.norm(Q, axis=1)
-    norms[norms == 0.0] = 1.0
-    Qn = Q / norms[:, None]
-    # per-query subspace distance tables against UNIT-normalized
-    # codebooks' raw entries: ADC approximates ||q_n - c_n||²; on unit
-    # vectors L2² = 2 - 2·cos, so ascending ADC ≈ descending cosine
-
-    def scan(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        sub_q = Qn.reshape(len(Qn), books.shape[0], d)  # (Q, m, d)
-        # tables[qi, s, c] = ||q_sub - codeword||² (constant ||q||²
-        # terms included — rank-equivalent either way)
-        tables = ((sub_q[:, :, None, :] - books[None, :, :, :]) ** 2).sum(
-            axis=3
-        )  # (Q, m, k)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _np.stack(pdf["cv"].to_numpy()).astype(_np.float64)
-            vn = _np.linalg.norm(V, axis=1)
-            vn[vn == 0.0] = 1.0
-            Vn = (V / vn[:, None]).reshape(len(V), books.shape[0], d)
-            # encode: argmin codeword per subspace (first-min ties)
-            codes = _np.empty((len(V), books.shape[0]), dtype=_np.int64)
-            for s in range(books.shape[0]):
-                dist = ((Vn[:, s, None, :] - books[None, s]) ** 2).sum(axis=2)
-                codes[:, s] = _np.argmin(dist, axis=1)
-            ids = pdf["id"].to_numpy()
-            out_q, out_n, out_a = [], [], []
-            srange = _np.arange(books.shape[0])
-            for qi in range(len(q_ids)):
-                adc = tables[qi][srange, codes].sum(axis=1)  # (B,)
-                adc = _np.round(adc, 9)
-                mask = ids != q_ids[qi]
-                cand_ids, cand_adc = ids[mask], adc[mask]
-                top = min(nk, len(cand_ids))
-                if top == 0:
-                    continue
-                # exact batch top-`top` by (adc asc, id asc)
-                order = _np.lexsort((cand_ids, cand_adc))[:top]
-                out_q.append(_np.full(top, q_ids[qi]))
-                out_n.append(cand_ids[order])
-                out_a.append(cand_adc[order])
-            if out_q:
-                yield _pd.DataFrame(
-                    {
-                        "query_id": _np.concatenate(out_q),
-                        "neighbor_id": _np.concatenate(out_n),
-                        "adc": _np.concatenate(out_a),
-                    }
-                )
-
-    cands = ensure_parallelism(c).mapInPandas(
-        scan, "query_id long, neighbor_id long, adc double"
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    survivors = (
-        cands.withColumn("__rn__", F.row_number().over(wq))
-        .filter(F.col("__rn__") <= nk)
-        .select("query_id", "neighbor_id")
-    )
-    qdf = local_table(
-        spark,
-        [(int(i), [float(x) for x in v]) for i, v in zip(q_ids, Q)],
-        "query_id long, qv array<double>",
-    )
-    scored = (
-        survivors.join(c.withColumnRenamed("id", "neighbor_id"), "neighbor_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _adc_topk(
+        "pq_topk", queries, vec_col, id_col, books, k, overfetch,
+        query_chunk, max_queries, scan=c, rerank=c,
     )
 
 
@@ -2998,22 +2862,20 @@ def ivfpq_topk(
 
     Composition of the verified parts: ivf_build's centroids (same
     deterministic seed + Lloyd as ivf_topk), pq_codebooks' per-subspace
-    codebooks, the pq_topk chunked-ADC scan (queries stream through the
-    driver in ``query_chunk`` slices — the ANN-probe contract, guarded
-    by ``max_queries``), and the standard exact-cosine JVM re-rank with
-    (round-6 DESC, id ASC) ties — output shape matches brute_force_topk.
+    codebooks, the pq_topk chunked-ADC probe (_adc_topk — the ANN-probe
+    query contract, guarded by ``max_queries``), and the standard
+    exact-cosine JVM re-rank with (round-6 DESC, id ASC) ties — output
+    shape matches brute_force_topk.
 
     Per chunk, each query's probed-cell set is computed driver-side
-    against the driver-sized centroid matrix and ships as a boolean
-    mask in the scan closure; the cell-membership test is a numpy
-    gather, the union of probed cells also filters the assigned frame
-    so Catalyst can prune (IN-literal on the cell column).
+    against the driver-sized centroid matrix (_probed_cells) and ships
+    as a slot map in the scan closure; the cell-membership test is a
+    numpy gather, the union of probed cells also filters the assigned
+    frame so Catalyst can prune (IN-literal on the cell column).
 
     Recall tunes on two independent axes: nprobe (cell coverage, the
     IVF axis) and m/codebook_k/overfetch (code fidelity, the PQ axis)
     — scored by the same recall-oracle pattern as IVF/LSH/PQ."""
-    import numpy as np
-
     centroids, assigned = ivf_build(
         corpus, vec_col, id_col, num_cells, train_iters
     )
@@ -3023,76 +2885,21 @@ def ivfpq_topk(
             corpus, vec_col, id_col, cell_ids, Cn, m, codebook_k,
             train_iters,
         )
-        query_chunk = min(query_chunk, 128)
     else:
         books = pq_codebooks(
             corpus, vec_col, id_col, m, codebook_k, train_iters
         )
-    spark = corpus.sparkSession
-    a = assigned  # (id, cv, cell)
     # survivors' exact re-rank fetches (id, cv) from the RAW corpus
-    # projection: `a` embeds the full-corpus assignment Arrow stage,
-    # which the fetch join does not need (same id→vector mapping)
+    # projection: `assigned` embeds the full-corpus assignment Arrow
+    # stage, which the fetch join does not need (same id→vector mapping)
     rerank = corpus.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("cv")
     )
-
-    chunk_results: list[DataFrame] = []
-    buf_ids: list[int] = []
-    buf_vecs: list = []
-
-    def flush() -> None:
-        q_ids = np.array(buf_ids, dtype=np.int64)
-        Q = np.stack(buf_vecs)
-        qn = np.linalg.norm(Q, axis=1)
-        qn[qn == 0.0] = 1.0
-        sims = (Q / qn[:, None]) @ Cn.T  # (Q, C)
-        # top-nprobe cells per query, ties to the LOWEST cell id (the
-        # _ivf_probe ordering: cosine desc, cell asc)
-        order = np.lexsort((cell_ids[None, :].repeat(len(Q), 0), -sims))
-        probe_cols = order[:, :nprobe]  # centroid-row indices
-        probed = np.zeros((len(Q), len(cell_ids)), dtype=bool)
-        for qi in range(len(Q)):
-            probed[qi, probe_cols[qi]] = True
-        union_cells = sorted(int(cell_ids[j]) for j in set(probe_cols.ravel()))
-        sub = a.filter(F.col("cell").isin(union_cells))
-        chunk_results.append(
-            _ivfpq_chunk(
-                sub, spark, q_ids, Q, books, cell_ids, probed, k,
-                int(k + overfetch),
-                resid_cn=Cn if by_residual else None,
-                probe_cols=probe_cols if by_residual else None,
-                rerank=rerank,
-            )
-        )
-        buf_ids.clear()
-        buf_vecs.clear()
-
-    n_seen = 0
-    for r in queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).toLocalIterator(prefetchPartitions=True):
-        n_seen += 1
-        if n_seen > max_queries:
-            raise ValueError(
-                f"ivfpq_topk: query set exceeds max_queries={max_queries}; "
-                "this is the ANN-probe operator — for corpus-sized query "
-                "sets use knn_join_ivf / knn_join_blocked"
-            )
-        buf_ids.append(int(r["query_id"]))
-        buf_vecs.append(np.asarray(r["qv"], dtype=np.float64))
-        if len(buf_ids) >= query_chunk:
-            flush()
-    if buf_ids:
-        flush()
-    if not chunk_results:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
-        )
-    out = chunk_results[0]
-    for extra in chunk_results[1:]:
-        out = out.unionByName(extra)
-    return out
+    return _adc_topk(
+        "ivfpq_topk", queries, vec_col, id_col, books, k, overfetch,
+        query_chunk, max_queries, scan=assigned, rerank=rerank,
+        ivf=(cell_ids, Cn, nprobe, by_residual),
+    )
 
 
 def ivfpq_topk_prebuilt(
@@ -3122,130 +2929,180 @@ def ivfpq_topk_prebuilt(
     the full-width vectors are touched survivor-count times. Output
     values are EXACTLY ivfpq_topk's for the same build parameters
     (codes round-trip parquet losslessly; pytest-pinned)."""
-    import numpy as np
-
     books, residual = _read_codebooks(spark, path)
     assigned = spark.read.parquet(f"{path}/assigned")
     # centroid sidecar: driver pyarrow read, zero Spark jobs
     cell_ids, Cn = _normalized_centroid_matrix(
         sidecar_parquet_rows(f"{path}/centroids")
     )
+    return _adc_topk(
+        "ivfpq_topk_prebuilt", queries, vec_col, id_col, books, k,
+        overfetch, query_chunk, max_queries, scan=assigned,
+        ivf=(cell_ids, Cn, nprobe, residual),
+    )
+
+
+# residual query tables are per (query, probed cell): a residual chunk
+# ships at most this many queries' nprobe·m·k tables
+_RESIDUAL_CHUNK = 128
+
+
+def _adc_topk(
+    op: str, queries, vec_col, id_col, books, k: int, overfetch: int,
+    query_chunk: int, max_queries: int, scan, rerank=None, ivf=None,
+) -> DataFrame:
+    """The query loop of the three ADC operators. The queries come to
+    the driver in one bounded collect (``op`` raises past
+    ``max_queries``) and are probed in ``query_chunk`` slices, one
+    _adc_chunk each; the chunk frames are unioned, and an empty query
+    set gives the empty contract-schema frame. Every chunk frame keeps
+    its tables closure until the union runs, so chunking bounds each
+    scan task's closure, not the driver's peak.
+
+    ``scan``: the ADC scan input, (id, cv) or (id, codes) plus ``cell``
+    with ``ivf``. ``rerank``: the (id, cv) frame the survivors' exact
+    re-rank reads; None reads it from the chunk's cell-filtered scan.
+    ``ivf=(cell_ids, Cn, nprobe, residual)`` probes each query's
+    ``nprobe`` nearest cells (filtering the scan to their union);
+    residual tables cap the chunk at _RESIDUAL_CHUNK queries."""
+    import functools
+
+    import numpy as np
+
+    rows = bounded_collect(
+        queries.select(
+            F.col(id_col).alias("query_id"),
+            _as_double(F.col(vec_col)).alias("qv"),
+        ),
+        max_queries,
+    )
+    if rows is None:
+        raise ValueError(
+            f"{op}: query set exceeds max_queries={max_queries}; this is "
+            "the ANN-probe operator — for corpus-sized query sets use "
+            "knn_join_ivf / knn_join_blocked"
+        )
+    cell_ids, Cn, nprobe, residual = ivf or (None, None, 0, False)
     if residual:
-        query_chunk = min(query_chunk, 128)
-
-    chunk_results: list[DataFrame] = []
-    buf_ids: list[int] = []
-    buf_vecs: list = []
-
-    def flush() -> None:
-        q_ids = np.array(buf_ids, dtype=np.int64)
-        Q = np.stack(buf_vecs)
-        qn = np.linalg.norm(Q, axis=1)
-        qn[qn == 0.0] = 1.0
-        sims = (Q / qn[:, None]) @ Cn.T
-        order = np.lexsort((cell_ids[None, :].repeat(len(Q), 0), -sims))
-        probe_cols = order[:, :nprobe]
-        probed = np.zeros((len(Q), len(cell_ids)), dtype=bool)
-        for qi in range(len(Q)):
-            probed[qi, probe_cols[qi]] = True
-        union_cells = sorted(int(cell_ids[j]) for j in set(probe_cols.ravel()))
-        sub = assigned.filter(F.col("cell").isin(union_cells))
-        chunk_results.append(
-            _ivfpq_prebuilt_chunk(
-                sub, spark, q_ids, Q, books, cell_ids, probed, k,
-                int(k + overfetch),
-                resid_cn=Cn if residual else None,
-                probe_cols=probe_cols if residual else None,
+        query_chunk = min(query_chunk, _RESIDUAL_CHUNK)
+    nk = int(k + overfetch)
+    parts = []
+    for lo in range(0, len(rows), query_chunk):
+        chunk = rows[lo : lo + query_chunk]
+        q_ids = np.array([r["query_id"] for r in chunk], dtype=np.int64)
+        Q = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in chunk])
+        if ivf is None:
+            parts.append(_adc_chunk(scan, rerank, q_ids, Q, books, k, nk))
+            continue
+        probe_cols, union_cells = _probed_cells(Q, cell_ids, Cn, nprobe)
+        sub = scan.filter(F.col("cell").isin(union_cells))
+        parts.append(
+            _adc_chunk(
+                sub, sub if rerank is None else rerank, q_ids, Q, books, k,
+                nk, (cell_ids, probe_cols, Cn if residual else None),
             )
         )
-        buf_ids.clear()
-        buf_vecs.clear()
-
-    n_seen = 0
-    for r in queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).toLocalIterator(prefetchPartitions=True):
-        n_seen += 1
-        if n_seen > max_queries:
-            raise ValueError(
-                f"ivfpq_topk_prebuilt: query set exceeds "
-                f"max_queries={max_queries}; use knn_join_ivf for "
-                "corpus-sized query sets"
-            )
-        buf_ids.append(int(r["query_id"]))
-        buf_vecs.append(np.asarray(r["qv"], dtype=np.float64))
-        if len(buf_ids) >= query_chunk:
-            flush()
-    if buf_ids:
-        flush()
-    if not chunk_results:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
+    if not parts:
+        return local_table(
+            queries.sparkSession, [],
+            "query_id long, neighbor_id long, cosine double, rank int",
         )
-    out = chunk_results[0]
-    for extra in chunk_results[1:]:
-        out = out.unionByName(extra)
-    return out
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
-def _ivfpq_prebuilt_chunk(
-    sub, spark, q_ids, Q, books, cell_ids, probed, k: int, nk: int,
-    resid_cn=None, probe_cols=None,
-) -> DataFrame:
-    """One prebuilt-IVF-PQ chunk: cell-masked ADC over STORED codes
-    (the scan never touches cv — its input projection is
-    (id, codes, cell) only) + exact re-rank reading cv for survivors.
-    ``resid_cn`` switches the query tables to the residual space (the
-    stored codes were residual-encoded at write)."""
+def _probed_cells(Q, cell_ids, Cn, nprobe: int):
+    """Each query's ``nprobe`` nearest cells as centroid-row indices
+    (|Q|, nprobe), ties to the LOWEST cell id (the _ivf_probe order:
+    cosine desc, cell asc), and the sorted union of their cell ids."""
     import numpy as np
 
+    qn = np.linalg.norm(Q, axis=1)
+    qn[qn == 0.0] = 1.0
+    sims = (Q / qn[:, None]) @ Cn.T
+    order = np.lexsort((cell_ids[None, :].repeat(len(Q), 0), -sims))
+    probe_cols = order[:, :nprobe]
+    return probe_cols, sorted(int(cell_ids[j]) for j in set(probe_cols.ravel()))
+
+
+def _adc_chunk(scan, rerank, q_ids, Q, books, k: int, nk: int, cells=None):
+    """One query chunk of the ADC probe: an ADC scan of ``scan`` that
+    keeps each batch's top ``nk`` per query by (adc, id) ascending, the
+    global top ``nk`` survivors by the same order, and the exact cosine
+    re-rank (_rank_by_cosine) of the survivors' (id, cv) from ``rerank``.
+
+    ``scan`` holds (id, codes) — stored codes, scanned as they are, so
+    the scan never reads cv — or (id, cv), encoded by _pq_encoder in the
+    same Arrow pass; plus ``cell`` when ``cells`` is given.
+    ``cells=(cell_ids, probe_cols, resid)``: a row counts for query qi
+    only when its cell is among ``probe_cols[qi]`` (see _probed_cells);
+    ``resid`` (the normalized centroid matrix) switches the encode and
+    the query tables to the residual space, one table per (query,
+    probed cell). Without ``cells`` every row counts: one cell that
+    every query probes."""
+    import numpy as np
+
+    m, _, d = books.shape
     norms = np.linalg.norm(Q, axis=1)
     norms[norms == 0.0] = 1.0
     Qn = Q / norms[:, None]
-    d = books.shape[2]
-    if resid_cn is not None:
-        slot, tables_r = _residual_query_tables(
-            Qn, books, resid_cn, probe_cols, cell_ids
+    cell_ids, probe_cols, resid = cells or (
+        None, np.zeros((len(Q), 1), dtype=np.int64), None
+    )
+    # slot[qi, cell position]: which of query qi's tables scores that
+    # cell (−1 = not probed)
+    slot = -np.ones(
+        (len(Q), 1 if cell_ids is None else len(cell_ids)), dtype=np.int16
+    )
+    if resid is None:
+        slot[np.arange(len(Q))[:, None], probe_cols] = 0
+        R = Qn.reshape(len(Q), 1, m, d)
+    else:
+        slot[np.arange(len(Q))[:, None], probe_cols] = np.arange(
+            probe_cols.shape[1]
         )
+        R = (Qn[:, None, :] - resid[probe_cols]).reshape(len(Q), -1, m, d)
+    # tables[qi, j, s, c] = ||R[qi, j, s] − books[s, c]||²: ADC
+    # approximates ||q_n − v||² (constant ||q||² terms included —
+    # rank-equivalent); on unit vectors L2² = 2 − 2·cos
+    tables = ((R[..., None, :] - books) ** 2).sum(axis=-1)
+    stored = "codes" in scan.columns
+    encode = _pq_encoder(books)
 
-    def scan(batches):
+    def adc(batches):
         import numpy as _np
         import pandas as _pd
 
-        if resid_cn is None:
-            sub_q = Qn.reshape(len(Qn), books.shape[0], d)
-            tables = ((sub_q[:, :, None, :] - books[None, :, :, :]) ** 2).sum(
-                axis=3
-            )
-        srange = _np.arange(books.shape[0])
+        srange = _np.arange(m)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            codes = _np.stack(pdf["codes"].to_numpy()).astype(_np.int64)
             ids = pdf["id"].to_numpy()
-            cpos = _np.searchsorted(cell_ids, pdf["cell"].to_numpy())
+            if cell_ids is None:
+                cpos = _np.zeros(len(ids), dtype=_np.int64)
+            else:
+                cpos = _np.searchsorted(cell_ids, pdf["cell"].to_numpy())
+            if stored:
+                codes = _np.stack(pdf["codes"].to_numpy()).astype(_np.int64)
+            else:
+                codes, _ = encode(
+                    _np.stack(pdf["cv"].to_numpy()).astype(_np.float64),
+                    None if resid is None else resid[cpos],
+                )
             out_q, out_n, out_a = [], [], []
             for qi in range(len(q_ids)):
-                if resid_cn is None:
-                    adc = tables[qi][srange, codes].sum(axis=1)
-                    mask = (ids != q_ids[qi]) & probed[qi, cpos]
-                    cand_adc = _np.round(adc, 9)[mask]
-                else:
-                    slots = slot[qi, cpos]
-                    mask = (ids != q_ids[qi]) & (slots >= 0)
-                    sl, cd = slots[mask], codes[mask]
-                    if len(sl) == 0:
-                        continue
-                    cand_adc = _np.round(
-                        tables_r[qi][
-                            sl[:, None], srange[None, :], cd
-                        ].sum(axis=1),
-                        9,
-                    )
+                slots = slot[qi, cpos]
+                mask = (ids != q_ids[qi]) & (slots >= 0)
                 cand_ids = ids[mask]
                 top = min(nk, len(cand_ids))
                 if top == 0:
                     continue
+                cand_adc = _np.round(
+                    tables[qi][slots[mask][:, None], srange, codes[mask]].sum(
+                        axis=1
+                    ),
+                    9,
+                )
+                # exact batch top-`top` by (adc asc, id asc)
                 order = _np.lexsort((cand_ids, cand_adc))[:top]
                 out_q.append(_np.full(top, q_ids[qi]))
                 out_n.append(cand_ids[order])
@@ -3259,8 +3116,9 @@ def _ivfpq_prebuilt_chunk(
                     }
                 )
 
-    cands = ensure_parallelism(sub.select("id", "codes", "cell")).mapInPandas(
-        scan, "query_id long, neighbor_id long, adc double"
+    cols = ["id", "codes" if stored else "cv"] + ([] if cells is None else ["cell"])
+    cands = ensure_parallelism(scan.select(*cols)).mapInPandas(
+        adc, "query_id long, neighbor_id long, adc double"
     )
     wq = Window.partitionBy("query_id").orderBy(
         F.col("adc").asc(), F.col("neighbor_id").asc()
@@ -3271,171 +3129,16 @@ def _ivfpq_prebuilt_chunk(
         .select("query_id", "neighbor_id")
     )
     qdf = local_table(
-        spark,
+        scan.sparkSession,
         [(int(i), [float(x) for x in v]) for i, v in zip(q_ids, Q)],
         "query_id long, qv array<double>",
     )
-    scored = (
+    return _rank_by_cosine(
         survivors.join(
-            sub.select(F.col("id").alias("neighbor_id"), "cv"), "neighbor_id"
-        )
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
+            rerank.select(F.col("id").alias("neighbor_id"), "cv"),
             "neighbor_id",
-            F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
-def _residual_query_tables(Qn, books, Cn, probe_cols, cell_ids):
-    """Residual ADC scaffolding: per (query, probed-cell-slot)
-    distance tables plus the (Q, C) slot map (−1 = not probed).
-    tables_r[qi, j, s, c] = ||(q_n − c_probed_j)_s − codeword||²."""
-    import numpy as np
-
-    m, kk, d = books.shape
-    nq, npb = probe_cols.shape
-    slot = -np.ones((nq, len(cell_ids)), dtype=np.int16)
-    tables_r = np.zeros((nq, npb, m, kk))
-    for qi in range(nq):
-        for j, cellpos in enumerate(probe_cols[qi]):
-            slot[qi, cellpos] = j
-            qres = (Qn[qi] - Cn[cellpos]).reshape(m, d)
-            tables_r[qi, j] = ((qres[:, None, :] - books) ** 2).sum(axis=2)
-    return slot, tables_r
-
-
-def _ivfpq_chunk(
-    sub, spark, q_ids, Q, books, cell_ids, probed, k: int, nk: int,
-    resid_cn=None, probe_cols=None, rerank=None,
-) -> DataFrame:
-    """One ivfpq_topk query chunk: cell-masked ADC scan over the
-    probed-cell subset + batch pruning + exact cosine re-rank.
-    ``resid_cn`` (normalized centroid matrix) switches both the encode
-    and the query tables to the residual space. ``rerank`` optionally
-    supplies the survivors' (id, cv) rows from a cheaper frame than
-    ``sub`` — on the fresh path ``sub`` embeds the full-corpus
-    assignment Arrow stage, which the survivor join does not need
-    (same id→vector mapping by construction)."""
-    import numpy as np
-
-    d = books.shape[2]
-    norms = np.linalg.norm(Q, axis=1)
-    norms[norms == 0.0] = 1.0
-    Qn = Q / norms[:, None]
-    if resid_cn is not None:
-        slot, tables_r = _residual_query_tables(
-            Qn, books, resid_cn, probe_cols, cell_ids
-        )
-
-    def scan(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        if resid_cn is None:
-            sub_q = Qn.reshape(len(Qn), books.shape[0], d)
-            tables = ((sub_q[:, :, None, :] - books[None, :, :, :]) ** 2).sum(
-                axis=3
-            )  # (Q, m, k)
-        srange = _np.arange(books.shape[0])
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _np.stack(pdf["cv"].to_numpy()).astype(_np.float64)
-            vn = _np.linalg.norm(V, axis=1)
-            vn[vn == 0.0] = 1.0
-            Vn = V / vn[:, None]
-            # map each row's cell to its centroid-row index for the
-            # probed-mask gather (cell_ids is sorted)
-            cpos = _np.searchsorted(cell_ids, pdf["cell"].to_numpy())
-            if resid_cn is not None:
-                Vn = Vn - resid_cn[cpos]
-            Vn = Vn.reshape(len(V), books.shape[0], d)
-            codes = _np.empty((len(V), books.shape[0]), dtype=_np.int64)
-            for s in range(books.shape[0]):
-                dist = ((Vn[:, s, None, :] - books[None, s]) ** 2).sum(axis=2)
-                codes[:, s] = _np.argmin(dist, axis=1)
-            ids = pdf["id"].to_numpy()
-            out_q, out_n, out_a = [], [], []
-            for qi in range(len(q_ids)):
-                if resid_cn is None:
-                    adc = tables[qi][srange, codes].sum(axis=1)
-                    mask = (ids != q_ids[qi]) & probed[qi, cpos]
-                    cand_adc = _np.round(adc, 9)[mask]
-                else:
-                    slots = slot[qi, cpos]
-                    mask = (ids != q_ids[qi]) & (slots >= 0)
-                    sl, cd = slots[mask], codes[mask]
-                    if len(sl) == 0:
-                        continue
-                    cand_adc = _np.round(
-                        tables_r[qi][
-                            sl[:, None], srange[None, :], cd
-                        ].sum(axis=1),
-                        9,
-                    )
-                cand_ids = ids[mask]
-                top = min(nk, len(cand_ids))
-                if top == 0:
-                    continue
-                order = _np.lexsort((cand_ids, cand_adc))[:top]
-                out_q.append(_np.full(top, q_ids[qi]))
-                out_n.append(cand_ids[order])
-                out_a.append(cand_adc[order])
-            if out_q:
-                yield _pd.DataFrame(
-                    {
-                        "query_id": _np.concatenate(out_q),
-                        "neighbor_id": _np.concatenate(out_n),
-                        "adc": _np.concatenate(out_a),
-                    }
-                )
-
-    cands = ensure_parallelism(sub.select("id", "cv", "cell")).mapInPandas(
-        scan, "query_id long, neighbor_id long, adc double"
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    survivors = (
-        cands.withColumn("__rn__", F.row_number().over(wq))
-        .filter(F.col("__rn__") <= nk)
-        .select("query_id", "neighbor_id")
-    )
-    qdf = local_table(
-        spark,
-        [(int(i), [float(x) for x in v]) for i, v in zip(q_ids, Q)],
-        "query_id long, qv array<double>",
-    )
-    vec_src = rerank if rerank is not None else sub
-    scored = (
-        survivors.join(
-            vec_src.select(F.col("id").alias("neighbor_id"), "cv"),
-            "neighbor_id",
-        )
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+        ).join(F.broadcast(qdf), "query_id"),
+        k,
     )
 
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pippin_spark.operators.util import bounded_collect
+
 # BPE-ish pre-tokenizer: word runs or single non-space symbols — the
 # same regex works in Java (Spark) and RE2-ish (DuckDB) dialects.
 BPE_PATTERN = "[A-Za-z0-9]+|[^A-Za-z0-9\\s]"
@@ -314,10 +316,8 @@ def changed_id_ranges(
     manifest exists), so the collect is #changed-buckets rows with a
     loud ``max_buckets`` guard for the regime where changes are so
     scattered a full re-scan is honest anyway."""
-    rows = (
-        diff.select("bucket").limit(max_buckets + 1).collect()
-    )
-    if len(rows) > max_buckets:
+    rows = bounded_collect(diff.select("bucket"), max_buckets)
+    if rows is None:
         raise ValueError(
             f"changed_id_ranges: more than {max_buckets} buckets differ — "
             "changes are not localized; run the full-corpus diff instead "

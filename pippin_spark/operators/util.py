@@ -269,6 +269,16 @@ def local_table(spark, rows, schema: str, num_partitions: int = 1) -> DataFrame:
     return df.coalesce(num_partitions) if num_partitions else df
 
 
+def bounded_collect(df: DataFrame, max_rows: int) -> Optional[list]:
+    """Every row of ``df`` when it holds at most ``max_rows``, else
+    None — one collect of at most ``max_rows + 1`` rows, which stops
+    scanning partitions once the guard is crossed. The probe behind
+    driver-local shortcuts for small inputs and behind loud
+    driver-sized contracts (query sets, anchor sets, diff buckets)."""
+    rows = df.limit(max_rows + 1).collect()
+    return rows if len(rows) <= max_rows else None
+
+
 def unit_rows(M):
     """Row-normalize a 2-D float64 matrix with the shared zero-norm
     guard: zero-norm rows come back as ALL-ZERO rows, so any dot
