@@ -15,6 +15,10 @@ multimodal columns) that a 100 TB training-data pipeline needs — all
 expressed Spark-first (native column expressions > pandas UDFs > RDDs).
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from pippin_spark.config import PipelineConfig, StageConfig
 from pippin_spark.errors import (
     PippinError,
@@ -26,6 +30,11 @@ from pippin_spark.futures import PippinFuture
 from pippin_spark.pipeline import Pipeline, Stage, GroupedStage
 from pippin_spark.session import get_spark
 from pippin_spark.statuses import Status
+
+# UDFs ship every function and class of this package by value, so Python
+# workers never import pippin_spark: they run it under any session, from
+# any working directory, with or without PYTHONPATH
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __all__ = [
     "Pipeline",

@@ -416,9 +416,10 @@ def q_agg_reduce(spark, sf_dir):
     "SELECT CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS r FROM lineitem",
 )
 def q_async_sum(spark, sf_dir):
-    # async twin on the HARD signal: the full background path runs —
-    # _submit → job-group thread → Future completion — and the result
-    # is wrapped back into a 1-row DataFrame for the oracle compare
+    # future form of sum on the HARD signal: the full background path
+    # runs — the future's thread → the pipeline's action runner inside
+    # the job group → Future completion — and the result is wrapped back
+    # into a 1-row DataFrame for the oracle compare
     # (asyncaggregate/asyncaggregate.go:29-44 + types/future.go:56-66)
     stage = _t(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("bigint").alias("value")

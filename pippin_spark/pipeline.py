@@ -16,12 +16,16 @@ UDF (or row UDF on request) — SURVEY.md §2.2 mappings.
 Transformations: transform/transform.go:29-235 (Map/MapWithError/
 MapWithErrorMapper/FlatMap×3/Filter). Aggregations:
 aggregate/aggregate.go:29-508 sync, asyncaggregate/asyncaggregate.go
-async twins. Control: pipeline/pipeline.go:58-97 (Start/Interrupt/
-Close/status), timeouts pipeline/pipeline.go:254-262.
+async: the reference writes each twice; here each terminal has one
+body, ``X()`` runs it blocking and ``X_async()`` is its PippinFuture
+form, both through the pipeline's one action runner. Control:
+pipeline/pipeline.go:58-97 (Start/Interrupt/Close/status), timeouts
+pipeline/pipeline.go:254-262.
 """
 
 from __future__ import annotations
 
+import inspect
 import threading
 import uuid
 from typing import Any, Callable, Iterable, Optional
@@ -158,12 +162,11 @@ class Pipeline:
         self.group_id = f"pippin-{uuid.uuid4().hex[:12]}"
         self._lock = threading.RLock()
         self._status = Status.PENDING if self.config.manual_start else Status.RUNNING
-        self._started = not self.config.manual_start
-        self._pending_actions: list[tuple[Callable[[], Any], PippinFuture]] = []
+        self._pending_actions: list[tuple[threading.Thread, PippinFuture]] = []
         self._timer: Optional[threading.Timer] = None
         self._error_sinks: list["ErrorSink"] = []
         self._active = 0  # running actions (for DONE transition)
-        if self._started:
+        if not self.config.manual_start:
             self._arm_timeout()
 
     # -- status --------------------------------------------------------
@@ -172,30 +175,22 @@ class Pipeline:
         with self._lock:
             return self._status
 
-    def _set_status(self, status: Status, *, force: bool = False) -> None:
-        with self._lock:
-            if self._status.is_terminal() and not force:
-                return
-            self._status = status
-
     # -- control (reference pipeline/pipeline.go:58-82) ----------------
     def start(self) -> None:
         """Release a manual-start pipeline (pipeline/pipeline.go:58-65).
 
         The reference cascades a start token stage-to-stage
         (pipeline/pipeline.go:229-248); with a lazy plan the cascade is
-        just: submit every queued async action now.
+        just: start every queued async action now.
         """
         with self._lock:
-            if self._started:
+            if self._status is not Status.PENDING:
                 return
-            self._started = True
-            if self._status is Status.PENDING:
-                self._status = Status.RUNNING
+            self._status = Status.RUNNING
             pending, self._pending_actions = self._pending_actions, []
         self._arm_timeout()
-        for action, future in pending:
-            self._submit_now(action, future)
+        for thread, _ in pending:
+            thread.start()
 
     def interrupt(self) -> None:
         """Graceful cancel (pipeline/pipeline.go:69-76): cancel the job
@@ -209,10 +204,7 @@ class Pipeline:
         self._cancel_timer()
         for _, future in pending:
             future._fail(PipelineInterruptedError())
-        try:
-            self.spark.sparkContext.cancelJobGroup(self.group_id)
-        except Exception:  # session already stopped
-            pass
+        self._cancel_jobs()
         self.logger.info("pipeline %s interrupted", self.group_id)
 
     def close(self) -> None:
@@ -226,23 +218,21 @@ class Pipeline:
     def __exit__(self, *exc) -> None:
         self.close()
 
+    def _cancel_jobs(self) -> None:
+        """Cancel the group's running jobs and every job it submits later,
+        so a stopped pipeline stays stopped even when its timer fired
+        before the action's job existed. PySpark wraps only the call for
+        running jobs; this one is the JVM SparkContext's."""
+        try:
+            self.spark.sparkContext._jsc.sc().cancelJobGroupAndFutureJobs(self.group_id)
+        except Exception:  # session already stopped
+            pass
+
     # -- timeout (pipeline/pipeline.go:254-262) ------------------------
     def _arm_timeout(self) -> None:
         if self.config.timeout is None or self._timer is not None:
             return
-
-        def on_timeout() -> None:
-            with self._lock:
-                if self._status.is_terminal():
-                    return
-                self._status = Status.TIMED_OUT
-            try:
-                self.spark.sparkContext.cancelJobGroup(self.group_id)
-            except Exception:
-                pass
-            self.logger.warn("pipeline %s timed out", self.group_id)
-
-        self._timer = threading.Timer(self.config.timeout, on_timeout)
+        self._timer = threading.Timer(self.config.timeout, self._time_out)
         self._timer.daemon = True
         self._timer.start()
 
@@ -251,140 +241,105 @@ class Pipeline:
             self._timer.cancel()
             self._timer = None
 
-    # -- action execution ----------------------------------------------
-    def _check_interrupted(self) -> None:
-        status = self.status
-        if status is Status.INTERRUPTED:
-            raise PipelineInterruptedError()
-        if status is Status.TIMED_OUT:
-            raise PipelineTimeoutError("context deadline exceeded")
-
-    def _run_sync(self, action: Callable[[], Any], timeout: Optional[float] = None) -> Any:
-        """Blocking terminal action in the caller's thread
-        (aggregate/aggregate.go:546-562). Raises ManualStartError on a
-        pending manual-start pipeline (aggregate.go:574-579)."""
+    def _time_out(self) -> None:
+        """Fired by the pipeline timer or an action's stage timer: the
+        pipeline is TIMED_OUT and its jobs are cancelled. A DONE pipeline
+        times out too: only a running action's timer can still fire."""
         with self._lock:
-            if not self._started:
-                raise ManualStartError()
-        self._check_interrupted()
-        sc = self.spark.sparkContext
-        stage_timer: Optional[threading.Timer] = None
-        if timeout is not None:
-            # per-stage timeout: bound the job materializing this stage
-            def on_stage_timeout() -> None:
-                self._set_status(Status.TIMED_OUT)
-                try:
-                    sc.cancelJobGroup(self.group_id)
-                except Exception:
-                    pass
+            if self._status in (Status.INTERRUPTED, Status.TIMED_OUT):
+                return
+            self._status = Status.TIMED_OUT
+        self._cancel_jobs()
+        self.logger.warn("pipeline %s timed out", self.group_id)
 
-            stage_timer = threading.Timer(timeout, on_stage_timeout)
-            stage_timer.daemon = True
-            stage_timer.start()
-        sc.setJobGroup(self.group_id, "pippin sync aggregation", True)
+    # -- action execution ----------------------------------------------
+    def _stop_error(self) -> Optional[PippinError]:
+        """The error a terminal action meets now, if any: the pipeline was
+        interrupted or timed out, or it is a manual-start pipeline not yet
+        started (aggregate/aggregate.go:574-579)."""
+        with self._lock:
+            if self._status is Status.INTERRUPTED:
+                return PipelineInterruptedError()
+            if self._status is Status.TIMED_OUT:
+                return PipelineTimeoutError("context deadline exceeded")
+            if self._status is Status.PENDING:
+                return ManualStartError()
+        return None
+
+    def _run_action(self, action: Callable[[], Any], timeout: Optional[float]) -> Any:
+        """Run one terminal action in the calling thread, inside the
+        pipeline's job group (aggregate/aggregate.go:546-562): blocking
+        terminals call it directly, each future's thread calls it.
+
+        ``timeout`` (the stage's) bounds this action alone. An action that
+        ends after interrupt() or a timeout raises PipelineInterruptedError
+        or PipelineTimeoutError, never its result; the last action to
+        complete moves the pipeline to DONE."""
+        error = self._stop_error()
+        if error is not None:
+            raise error
+        timer: Optional[threading.Timer] = None
+        if timeout is not None:
+            timer = threading.Timer(timeout, self._time_out)
+            timer.daemon = True
+            timer.start()
+        sc = self.spark.sparkContext
+        sc.setJobGroup(self.group_id, "pippin aggregation", True)
         with self._lock:
             self._active += 1
+        completed = False
         try:
-            result = action()
+            try:
+                result = action()
+            except Exception:
+                # a cancelled Spark job surfaces as a Py4J error; translate
+                if self._stop_error() is None:
+                    raise
+            error = self._stop_error()
+            if error is not None:
+                raise error
             self._flush_error_sinks()
+            completed = True
+            return result
+        finally:
+            if timer is not None:
+                timer.cancel()
             with self._lock:
                 self._active -= 1
                 # only the LAST completing action disarms the pipeline
                 # timer — earlier completions must leave the
                 # PipelineConfig.timeout armed for in-flight siblings
-                done = self._active == 0 and not self._status.is_terminal()
+                done = completed and self._active == 0 and not self._status.is_terminal()
                 if done:
                     self._status = Status.DONE
             if done:
                 self._cancel_timer()
-            return result
-        except PippinError:
-            with self._lock:
-                self._active -= 1
-            raise
-        except Exception as exc:
-            with self._lock:
-                self._active -= 1
-            # a cancelled Spark job surfaces as a Py4J error; translate
-            self._check_interrupted()
-            raise exc
-        finally:
-            if stage_timer is not None:
-                stage_timer.cancel()
             try:
                 sc.setJobGroup(None, None)  # type: ignore[arg-type]
             except Exception:
                 pass
 
-    def _submit(self, action: Callable[[], Any], timeout: Optional[float] = None) -> PippinFuture:
-        """Async terminal action (asyncaggregate/asyncaggregate.go:529-647):
-        runs on a background thread inside the job group; returns a
-        PippinFuture immediately. On a pending manual-start pipeline the
-        action is queued and released by start() — matching the
-        reference's start-signal cascade (asyncaggregate.go:555-572)."""
+    def _submit(self, action: Callable[[], Any], timeout: Optional[float]) -> PippinFuture:
+        """Future form of _run_action (asyncaggregate/asyncaggregate.go:
+        529-647): returns a PippinFuture at once and runs the action on its
+        own thread. On a pending manual-start pipeline the thread waits in
+        the queue start() releases — the reference's start-signal cascade
+        (asyncaggregate.go:555-572)."""
         future = PippinFuture()
-        with self._lock:
-            if self._status is Status.INTERRUPTED:
-                future._fail(PipelineInterruptedError())
-                return future
-            if not self._started:
-                self._pending_actions.append((self._wrap_timeout(action, timeout), future))
-                return future
-        self._submit_now(self._wrap_timeout(action, timeout), future)
-        return future
 
-    def _wrap_timeout(self, action: Callable[[], Any], timeout: Optional[float]) -> Callable[[], Any]:
-        if timeout is None:
-            return action
-
-        def wrapped() -> Any:
-            timer = threading.Timer(timeout, lambda: (self._set_status(Status.TIMED_OUT),
-                                                      self._safe_cancel()))
-            timer.daemon = True
-            timer.start()
-            try:
-                return action()
-            finally:
-                timer.cancel()
-
-        return wrapped
-
-    def _safe_cancel(self) -> None:
-        try:
-            self.spark.sparkContext.cancelJobGroup(self.group_id)
-        except Exception:
-            pass
-
-    def _submit_now(self, action: Callable[[], Any], future: PippinFuture) -> None:
         def run() -> None:
-            sc = self.spark.sparkContext
-            sc.setJobGroup(self.group_id, "pippin async aggregation", True)
-            with self._lock:
-                self._active += 1
             try:
-                result = action()
-                self._flush_error_sinks()
-                with self._lock:
-                    self._active -= 1
-                    done = self._active == 0 and not self._status.is_terminal()
-                    if done:
-                        self._status = Status.DONE
-                if done:
-                    self._cancel_timer()
-                future._complete(result)
+                future._complete(self._run_action(action, timeout))
             except BaseException as exc:  # noqa: BLE001 — must fail the future
-                with self._lock:
-                    self._active -= 1
-                status = self.status
-                if status is Status.INTERRUPTED:
-                    future._fail(PipelineInterruptedError())
-                elif status is Status.TIMED_OUT:
-                    future._fail(PipelineTimeoutError("context deadline exceeded"))
-                else:
-                    future._fail(exc)
+                future._fail(exc)
 
         thread = threading.Thread(target=run, name=f"{self.group_id}-action", daemon=True)
+        with self._lock:
+            if self._status is Status.PENDING:
+                self._pending_actions.append((thread, future))
+                return future
         thread.start()
+        return future
 
     # -- error sinks (SURVEY.md §7.3 #1) -------------------------------
     def _register_error_sink(self, sink: "ErrorSink") -> None:
@@ -661,6 +616,63 @@ def _columnize(
 
 
 # ---------------------------------------------------------------------------
+# terminal bodies
+# ---------------------------------------------------------------------------
+
+
+def _terminal(
+    body: Callable[..., Callable[[], Any]],
+) -> tuple[Callable[..., Any], Callable[..., PippinFuture]]:
+    """The blocking form and the ``*_async`` form of one terminal.
+
+    ``body(stage, *args)`` builds the terminal's lazy frame and returns
+    the action that runs it and steps from its rows to the result. Both
+    forms run that one body through Stage._act: the blocking form returns
+    the result, the async form a PippinFuture of it."""
+
+    def blocking(self: "Stage", *args: Any, **kwargs: Any) -> Any:
+        return self._act(body(self, *args, **kwargs))
+
+    def future(self: "Stage", *args: Any, **kwargs: Any) -> PippinFuture:
+        return self._act(body(self, *args, **kwargs), blocking=False)
+
+    # the public names and the body's parameters, for help() and inspect
+    name = body.__name__.lstrip("_")
+    params = inspect.signature(body)
+    for form, suffix, returns in ((blocking, "", Any), (future, "_async", PippinFuture)):
+        form.__name__ = name + suffix
+        form.__qualname__ = f"Stage.{form.__name__}"
+        form.__signature__ = params.replace(return_annotation=returns)
+    return blocking, future
+
+
+def _first(df: DataFrame) -> Callable[[], Any]:
+    """Action: the first value of ``df``'s one row."""
+    return lambda: df.collect()[0][0]
+
+
+def _column(df: DataFrame) -> Callable[[], list]:
+    """Action: ``df``'s first column as a list."""
+    return lambda: [r[0] for r in df.collect()]
+
+
+def _dict(df: DataFrame, value: str) -> Callable[[], dict]:
+    """Action: ``{key: value}`` over ``df``'s rows."""
+    return lambda: {r[KEY]: r[value] for r in df.collect()}
+
+
+def _complex(df: DataFrame, empty: Optional[complex]) -> Callable[[], Optional[complex]]:
+    """Action: ``df``'s one (re, im) row as a complex, or ``empty`` when
+    the aggregate saw no rows."""
+
+    def run() -> Optional[complex]:
+        row = df.collect()[0]
+        return empty if row["re"] is None else complex(row["re"], row["im"])
+
+    return run
+
+
+# ---------------------------------------------------------------------------
 # Stage
 # ---------------------------------------------------------------------------
 
@@ -715,9 +727,6 @@ class Stage:
             f"stage); this stage has columns {self._df.columns}. Use map("
             "F.col(...)) / select() to project first."
         )
-
-    def _timeout(self) -> Optional[float]:
-        return self.config.timeout
 
     @property
     def logger(self) -> PippinLogger:
@@ -890,19 +899,22 @@ class Stage:
         self._df.explain(mode)
 
     # ------------------------------------------------------------------
-    # terminal aggregations — sync (aggregate/aggregate.go:29-508)
+    # terminal aggregations (aggregate/aggregate.go:29-508 sync,
+    # asyncaggregate/asyncaggregate.go:31-525 async; SURVEY.md §3.2)
     # ------------------------------------------------------------------
-    # Each has a lazy *_df twin returning a DataFrame (used by the driver
+    # Each terminal's body is written once, as a private method that
+    # builds the lazy frame and returns the action running it (see
+    # _terminal); X() runs it blocking, X_async() as a PippinFuture. Each
+    # has a lazy *_df twin returning a DataFrame (used by the declared
     # correctness queries and by users who don't want driver collection).
 
-    def _run(self, action: Callable[[], Any]) -> Any:
+    def _act(self, action: Callable[[], Any], blocking: bool = True) -> Any:
+        """Run one terminal action through the pipeline's action runner
+        under this stage's timeout and logger: the result, or with
+        ``blocking=False`` a PippinFuture of it."""
         self.logger.debug("stage %d: running terminal action", self.id)
-        return self.pipeline._run_sync(action, self._timeout())
-
-    def _agg_one(self, col: Column) -> Any:
-        df = self._df.agg(col.alias("r"))
-        row = self._run(lambda: df.collect()[0])
-        return row["r"]
+        run = self.pipeline._run_action if blocking else self.pipeline._submit
+        return run(action, self.config.timeout)
 
     # Sum — aggregate.go:29-40; zero-seed parity via strict_zero_seed
     def sum_df(self, col: Optional[str] = None) -> DataFrame:
@@ -912,8 +924,10 @@ class Stage:
             expr = F.coalesce(expr, F.lit(0))
         return self._df.agg(expr.alias("sum"))
 
-    def sum(self, col: Optional[str] = None) -> Any:
-        return self._run(lambda: self.sum_df(col).collect()[0][0])
+    def _sum(self, col: Optional[str] = None):
+        return _first(self.sum_df(col))
+
+    sum, sum_async = _terminal(_sum)
 
     # SumComplexType — aggregate.go:53-64; struct(re,im) encoding
     def sum_complex_df(self, col: Optional[str] = None) -> DataFrame:
@@ -922,19 +936,21 @@ class Stage:
             F.sum(F.col(c)["re"]).alias("re"), F.sum(F.col(c)["im"]).alias("im")
         )
 
-    def sum_complex(self, col: Optional[str] = None) -> Optional[complex]:
-        row = self._run(lambda: self.sum_complex_df(col).collect()[0])
-        if row["re"] is None:
-            return 0j if self.pipeline.config.strict_zero_seed else None
-        return complex(row["re"], row["im"])
+    def _sum_complex(self, col: Optional[str] = None):
+        empty = 0j if self.pipeline.config.strict_zero_seed else None
+        return _complex(self.sum_complex_df(col), empty)
+
+    sum_complex, sum_complex_async = _terminal(_sum_complex)
 
     # Avg — aggregate.go:72-86 (always float64)
     def avg_df(self, col: Optional[str] = None) -> DataFrame:
         c = col or self._value_col()
         return self._df.agg(F.avg(c).cast("double").alias("avg"))
 
-    def avg(self, col: Optional[str] = None) -> Optional[float]:
-        return self._run(lambda: self.avg_df(col).collect()[0][0])
+    def _avg(self, col: Optional[str] = None):
+        return _first(self.avg_df(col))
+
+    avg, avg_async = _terminal(_avg)
 
     # AvgComplexType — aggregate.go:98-112
     def avg_complex_df(self, col: Optional[str] = None) -> DataFrame:
@@ -943,11 +959,10 @@ class Stage:
             F.avg(F.col(c)["re"]).alias("re"), F.avg(F.col(c)["im"]).alias("im")
         )
 
-    def avg_complex(self, col: Optional[str] = None) -> Optional[complex]:
-        row = self._run(lambda: self.avg_complex_df(col).collect()[0])
-        if row["re"] is None:
-            return None
-        return complex(row["re"], row["im"])
+    def _avg_complex(self, col: Optional[str] = None):
+        return _complex(self.avg_complex_df(col), None)
+
+    avg_complex, avg_complex_async = _terminal(_avg_complex)
 
     # Max/Min — aggregate.go:124-164; note reference zero-seed divergence
     def max_df(self, col: Optional[str] = None) -> DataFrame:
@@ -957,8 +972,10 @@ class Stage:
             expr = F.coalesce(F.greatest(expr, F.lit(0)), F.lit(0))
         return self._df.agg(expr.alias("max"))
 
-    def max(self, col: Optional[str] = None) -> Any:
-        return self._run(lambda: self.max_df(col).collect()[0][0])
+    def _max(self, col: Optional[str] = None):
+        return _first(self.max_df(col))
+
+    max, max_async = _terminal(_max)
 
     def min_df(self, col: Optional[str] = None) -> DataFrame:
         c = col or self._value_col()
@@ -967,15 +984,19 @@ class Stage:
             expr = F.coalesce(F.least(expr, F.lit(0)), F.lit(0))
         return self._df.agg(expr.alias("min"))
 
-    def min(self, col: Optional[str] = None) -> Any:
-        return self._run(lambda: self.min_df(col).collect()[0][0])
+    def _min(self, col: Optional[str] = None):
+        return _first(self.min_df(col))
+
+    min, min_async = _terminal(_min)
 
     # Count — aggregate.go:175-186
     def count_df(self) -> DataFrame:
         return self._df.agg(F.count(F.lit(1)).alias("count"))
 
-    def count(self) -> int:
-        return self._run(lambda: self._df.count())
+    def _count(self):
+        return self._df.count
+
+    count, count_async = _terminal(_count)
 
     # Sort / SortDesc — aggregate.go:201-244: collect-all sorted.
     # At scale use sorted_df (distributed total sort, range-partitioned).
@@ -983,15 +1004,17 @@ class Stage:
         c = col or self._value_col()
         return self._df.orderBy(F.col(c).desc() if desc else F.col(c).asc())
 
-    def sort(self, col: Optional[str] = None) -> list:
+    def _sort(self, col: Optional[str] = None):
         c = col or self._value_col()
-        return self._run(lambda: [r[0] for r in self.sorted_df(c).select(c).collect()])
+        return _column(self.sorted_df(c).select(c))
 
-    def sort_desc(self, col: Optional[str] = None) -> list:
+    sort, sort_async = _terminal(_sort)
+
+    def _sort_desc(self, col: Optional[str] = None):
         c = col or self._value_col()
-        return self._run(
-            lambda: [r[0] for r in self.sorted_df(c, desc=True).select(c).collect()]
-        )
+        return _column(self.sorted_df(c, desc=True).select(c))
+
+    sort_desc, sort_desc_async = _terminal(_sort_desc)
 
     # GroupBy — aggregate.go:257-276: key fn over full elements
     def group_by(self, key_fn: Any = None, return_type: Optional[T.DataType] = None) -> "GroupedStage":
@@ -1002,6 +1025,10 @@ class Stage:
             key = _columnize(key_fn, F.col(self._value_col()), return_type, False)
         return GroupedStage(self, key)
 
+    def group_by_async(self, key_fn: Any, return_type: Optional[T.DataType] = None) -> PippinFuture:
+        """Future of ``group_by(key_fn, return_type).to_dict()``."""
+        return self._act(self.group_by(key_fn, return_type)._to_dict(), blocking=False)
+
     # Reduce — aggregate.go:292-303. Contract: fn associative+commutative
     # (SURVEY.md §1.4). Column-pair fns lower to a native two-level
     # aggregate (_native_reduce_df: per-partition fold, then fold of ≤P
@@ -1011,26 +1038,27 @@ class Stage:
         """Lazy 1-row DataFrame form of reduce() for Column-pair fns."""
         return _native_reduce_df(self._df, self._value_col(), fn)
 
-    def reduce(self, fn: Callable[[Any, Any], Any]) -> Any:
+    def _reduce(self, fn: Callable[[Any, Any], Any]):
         c = self._value_col()
         try:
-            probe = fn(F.col(c), F.col(c))
-            native = isinstance(probe, Column)
+            native = isinstance(fn(F.col(c), F.col(c)), Column)
         except Exception:
             native = False
         if native:
-            merged = self.reduce_df(fn)
-            return self._run(lambda: merged.collect()[0]["r"])
+            return _first(self.reduce_df(fn))
         rdd = self._df.select(c).rdd.map(lambda r: r[0])
-        return self._run(lambda: rdd.treeReduce(fn))
+        return lambda: rdd.treeReduce(fn)
+
+    reduce, reduce_async = _terminal(_reduce)
 
     # AsSlice — aggregate.go:318-329 (unordered collect)
-    def as_slice(self, col: Optional[str] = None) -> list:
-        c = col or self._value_col()
-        return self._run(lambda: [r[0] for r in self._df.select(c).collect()])
+    def _as_slice(self, col: Optional[str] = None):
+        return _column(self._df.select(col or self._value_col()))
+
+    as_slice, as_slice_async = _terminal(_as_slice)
 
     def collect(self) -> list:
-        return self._run(lambda: self._df.collect())
+        return self._act(self._df.collect)
 
     def to_local_iterator(self):
         return self._df.toLocalIterator()
@@ -1062,41 +1090,47 @@ class Stage:
         agg = {"max": F.max, "min": F.min, "any": F.first}[conflict](VALUE)
         return df.groupBy(KEY).agg(agg.alias(VALUE))
 
-    def as_map(self, fn: Any = None, conflict: str = "max") -> dict:
-        rows = self._run(lambda: self.as_map_df(fn, conflict).collect())
-        return {r[KEY]: r[VALUE] for r in rows}
+    def _as_map(self, fn: Any = None, conflict: str = "max"):
+        return _dict(self.as_map_df(fn, conflict), VALUE)
+
+    as_map, as_map_async = _terminal(_as_map)
 
     # AsMultiMap — aggregate.go:382-401
     def as_multi_map_df(self, fn: Any = None) -> DataFrame:
         df = self._pair_df(fn)
         return df.groupBy(KEY).agg(F.collect_list(VALUE).alias("values"))
 
-    def as_multi_map(self, fn: Any = None) -> dict:
-        rows = self._run(lambda: self.as_multi_map_df(fn).collect())
-        return {r[KEY]: r["values"] for r in rows}
+    def _as_multi_map(self, fn: Any = None):
+        return _dict(self.as_multi_map_df(fn), "values")
+
+    as_multi_map, as_multi_map_async = _terminal(_as_multi_map)
 
     # ForEach — aggregate.go:414-431: executor-side side effect; use
     # for_each_driver for driver-side callbacks (toLocalIterator).
-    def for_each(self, fn: Callable[[Any], None]) -> None:
-        c = self._value_col()
-        self._run(lambda: self._df.select(c).foreach(lambda row: fn(row[0])))
+    def _for_each(self, fn: Callable[[Any], None]):
+        df = self._df.select(self._value_col())
+        return lambda: df.foreach(lambda row: fn(row[0]))
+
+    for_each, for_each_async = _terminal(_for_each)
 
     def for_each_driver(self, fn: Callable[[Any], None]) -> None:
-        c = self._value_col()
+        df = self._df.select(self._value_col())
 
         def run() -> None:
-            for row in self._df.select(c).toLocalIterator():
+            for row in df.toLocalIterator():
                 fn(row[0])
 
-        self._run(run)
+        self._act(run)
 
     # Distinct — aggregate.go:449-470 ("result is in a random order")
     def distinct_df(self, col: Optional[str] = None) -> DataFrame:
         c = col or self._value_col()
         return self._df.select(c).distinct()
 
-    def distinct(self, col: Optional[str] = None) -> list:
-        return self._run(lambda: [r[0] for r in self.distinct_df(col).collect()])
+    def _distinct(self, col: Optional[str] = None):
+        return _column(self.distinct_df(col))
+
+    distinct, distinct_async = _terminal(_distinct)
 
     # DistinctCount — aggregate.go:486-508; approx twin is the documented
     # 100 TB fast path (HLL sketch, no full shuffle of the key space).
@@ -1104,105 +1138,17 @@ class Stage:
         c = col or self._value_col()
         return self._df.agg(F.count_distinct(F.col(c)).alias("distinct_count"))
 
-    def distinct_count(self, col: Optional[str] = None) -> int:
-        return self._run(lambda: self.distinct_count_df(col).collect()[0][0])
+    def _distinct_count(self, col: Optional[str] = None):
+        return _first(self.distinct_count_df(col))
+
+    distinct_count, distinct_count_async = _terminal(_distinct_count)
 
     def approx_distinct_count_df(self, col: Optional[str] = None, rsd: float = 0.05) -> DataFrame:
         c = col or self._value_col()
         return self._df.agg(F.approx_count_distinct(F.col(c), rsd).alias("approx_distinct_count"))
 
     def approx_distinct_count(self, col: Optional[str] = None, rsd: float = 0.05) -> int:
-        return self._run(lambda: self.approx_distinct_count_df(col, rsd).collect()[0][0])
-
-    # ------------------------------------------------------------------
-    # terminal aggregations — async twins
-    # (asyncaggregate/asyncaggregate.go:31-525; SURVEY.md §3.2)
-    # ------------------------------------------------------------------
-    def _async(self, action: Callable[[], Any]) -> PippinFuture:
-        return self.pipeline._submit(action, self._timeout())
-
-    def sum_async(self, col: Optional[str] = None) -> PippinFuture:
-        return self._async(lambda: self.sum_df(col).collect()[0][0])
-
-    def sum_complex_async(self, col: Optional[str] = None) -> PippinFuture:
-        def act():
-            row = self.sum_complex_df(col).collect()[0]
-            if row["re"] is None:
-                return 0j if self.pipeline.config.strict_zero_seed else None
-            return complex(row["re"], row["im"])
-        return self._async(act)
-
-    def avg_async(self, col: Optional[str] = None) -> PippinFuture:
-        return self._async(lambda: self.avg_df(col).collect()[0][0])
-
-    def avg_complex_async(self, col: Optional[str] = None) -> PippinFuture:
-        def act():
-            row = self.avg_complex_df(col).collect()[0]
-            return None if row["re"] is None else complex(row["re"], row["im"])
-        return self._async(act)
-
-    def max_async(self, col: Optional[str] = None) -> PippinFuture:
-        return self._async(lambda: self.max_df(col).collect()[0][0])
-
-    def min_async(self, col: Optional[str] = None) -> PippinFuture:
-        return self._async(lambda: self.min_df(col).collect()[0][0])
-
-    def count_async(self) -> PippinFuture:
-        return self._async(lambda: self._df.count())
-
-    def sort_async(self, col: Optional[str] = None) -> PippinFuture:
-        c = col or self._value_col()
-        return self._async(lambda: [r[0] for r in self.sorted_df(c).select(c).collect()])
-
-    def sort_desc_async(self, col: Optional[str] = None) -> PippinFuture:
-        c = col or self._value_col()
-        return self._async(
-            lambda: [r[0] for r in self.sorted_df(c, desc=True).select(c).collect()]
-        )
-
-    def group_by_async(self, key_fn: Any, return_type: Optional[T.DataType] = None) -> PippinFuture:
-        grouped = self.group_by(key_fn, return_type)
-        return self._async(grouped._collect_dict)
-
-    def reduce_async(self, fn: Callable[[Any, Any], Any]) -> PippinFuture:
-        return self._async(lambda: Stage(self.pipeline, self._df, self.config, self.id).reduce_inline(fn))
-
-    def reduce_inline(self, fn: Callable[[Any, Any], Any]) -> Any:
-        """reduce() body without the sync action wrapper (for async)."""
-        c = self._value_col()
-        try:
-            probe = fn(F.col(c), F.col(c))
-            native = isinstance(probe, Column)
-        except Exception:
-            native = False
-        if native:
-            merged = self.reduce_df(fn)
-            return merged.collect()[0]["r"]
-        return self._df.select(c).rdd.map(lambda r: r[0]).treeReduce(fn)
-
-    def as_slice_async(self, col: Optional[str] = None) -> PippinFuture:
-        c = col or self._value_col()
-        return self._async(lambda: [r[0] for r in self._df.select(c).collect()])
-
-    def as_map_async(self, fn: Any = None, conflict: str = "max") -> PippinFuture:
-        df = self.as_map_df(fn, conflict)
-        return self._async(lambda: {r[KEY]: r[VALUE] for r in df.collect()})
-
-    def as_multi_map_async(self, fn: Any = None) -> PippinFuture:
-        df = self.as_multi_map_df(fn)
-        return self._async(lambda: {r[KEY]: r["values"] for r in df.collect()})
-
-    def for_each_async(self, fn: Callable[[Any], None]) -> PippinFuture:
-        c = self._value_col()
-        return self._async(lambda: self._df.select(c).foreach(lambda row: fn(row[0])))
-
-    def distinct_async(self, col: Optional[str] = None) -> PippinFuture:
-        df = self.distinct_df(col)
-        return self._async(lambda: [r[0] for r in df.collect()])
-
-    def distinct_count_async(self, col: Optional[str] = None) -> PippinFuture:
-        df = self.distinct_count_df(col)
-        return self._async(lambda: df.collect()[0][0])
+        return self._act(_first(self.approx_distinct_count_df(col, rsd)))
 
     # -- file sinks (engine extension — the reference's only terminal
     # outputs are in-memory collections, aggregate.go; a 100 TB result
@@ -1220,15 +1166,15 @@ class Stage:
         writer = self._df.write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        self._run(lambda: writer.parquet(path))
+        self._act(lambda: writer.parquet(path))
 
     def to_csv(self, path: str, mode: str = "overwrite", header: bool = True, **options: Any) -> None:
         writer = self._df.write.mode(mode).options(header=str(header).lower(), **options)
-        self._run(lambda: writer.csv(path))
+        self._act(lambda: writer.csv(path))
 
     def to_json(self, path: str, mode: str = "overwrite", **options: Any) -> None:
         writer = self._df.write.mode(mode).options(**options)
-        self._run(lambda: writer.json(path))
+        self._act(lambda: writer.json(path))
 
     # errors() — inspect this stage's quarantined inputs (extension)
     def errors(self) -> Optional[DataFrame]:
@@ -1264,12 +1210,12 @@ class GroupedStage:
         lists (partial/map-side aggregation applies)."""
         return self._df.groupBy(KEY).agg(*exprs)
 
-    def _collect_dict(self) -> dict:
-        return {r[KEY]: r["values"] for r in self.df.collect()}
+    def _to_dict(self) -> Callable[[], dict]:
+        return _dict(self.df, "values")
 
     def to_dict(self) -> dict:
         """Reference result shape map[K][]In (driver-side; small data)."""
-        return self.stage.pipeline._run_sync(self._collect_dict)
+        return self.stage._act(self._to_dict())
 
 
 # ---------------------------------------------------------------------------

@@ -59,10 +59,82 @@ def test_interrupt_then_submit(spark):
 
 
 def test_pipeline_timeout_status(spark):
-    # pippin_test.go:490-: timeout → status TimedOut
+    # pippin_test.go:490-: timeout → status TimedOut; both forms of a
+    # terminal then fail with 'context deadline exceeded'
     cfg = PipelineConfig(timeout=0.05)
     s = Pipeline.from_slice(spark, VALS, config=cfg)
     time.sleep(0.3)
+    assert s.pipeline.status is Status.TIMED_OUT
+    with pytest.raises(PipelineTimeoutError, match="context deadline exceeded"):
+        s.sum()
+    with pytest.raises(PipelineTimeoutError, match="context deadline exceeded"):
+        s.sum_async().get_with_timeout(60.0)
+
+
+@pytest.mark.parametrize("terminal", ["sum", "sum_async", "to_dict"])
+def test_stage_timeout_cancels_terminal(spark, terminal):
+    # StageConfig.timeout bounds the terminal action of the stage's plan
+    # (configs/stage.go:26-31): each row sleeps 10 s JVM-side, so the
+    # 2 s stage timeout cancels the job and the pipeline is TIMED_OUT
+    import logging
+
+    from pyspark.sql import functions as SF
+
+    from pippin_spark import StageConfig
+    from pippin_spark.logging_utils import PippinLogger
+
+    class Recorder(PippinLogger):
+        def __init__(self):
+            super().__init__(logging.getLogger("rec.stage_timeout"))
+            self.records = []
+
+        def debug(self, msg, *args):
+            self.records.append(msg % args if args else msg)
+
+    def sleeping(ms, config=None):
+        sleep = SF.expr(f"reflect('java.lang.Thread','sleep', CAST({ms} AS BIGINT))")
+        return Pipeline.from_dataframe(spark.range(0, 4, 1, 2)).map(
+            lambda c: SF.length(sleep), config=config
+        )
+
+    run = {
+        "sum": lambda s: s.sum(),
+        "sum_async": lambda s: s.sum_async().get_with_timeout(60.0),
+        "to_dict": lambda s: s.group_by(lambda c: SF.lit(0)).to_dict(),
+    }[terminal]
+    log = Recorder()
+    s = sleeping(10_000, StageConfig(timeout=2.0, logger=log))
+    t0 = time.monotonic()
+    with pytest.raises(PipelineTimeoutError, match="context deadline exceeded"):
+        run(s)
+    assert time.monotonic() - t0 < 8.0
+    assert s.pipeline.status is Status.TIMED_OUT
+    assert log.records, "the stage logger must receive the action log"
+
+
+@pytest.mark.parametrize("parts", [1, 4], ids=["after_last_job", "between_jobs"])
+def test_timeout_fired_outside_a_job_stops_the_action(spark, parts):
+    # a timer that fires while no job runs still stops the action:
+    # for_each_driver runs one job per partition and its callback sleeps
+    # 3 s on the driver, so the 2 s stage timeout fires after a job.
+    # The next job is cancelled when it is submitted, and an action whose
+    # last job already ran raises instead of returning
+    from pippin_spark import StageConfig
+
+    seen = []
+
+    def slow(v):
+        seen.append(v)
+        time.sleep(3.0)
+
+    s = Pipeline.from_dataframe(spark.range(0, parts, 1, parts)).map(
+        lambda c: c, config=StageConfig(timeout=2.0)
+    )
+    t0 = time.monotonic()
+    with pytest.raises(PipelineTimeoutError, match="context deadline exceeded"):
+        s.for_each_driver(slow)
+    assert time.monotonic() - t0 < 6.0
+    assert len(seen) <= 1
     assert s.pipeline.status is Status.TIMED_OUT
 
 
@@ -79,16 +151,58 @@ def test_future_timeout(spark):
 
 
 def test_async_all_aggregations(spark):
-    assert Pipeline.from_slice(spark, VALS).avg_async().get() == pytest.approx(1.8)
-    assert Pipeline.from_slice(spark, VALS).max_async().get() == 5
-    assert Pipeline.from_slice(spark, VALS).min_async().get() == -3
-    assert Pipeline.from_slice(spark, VALS).count_async().get() == 5
-    assert Pipeline.from_slice(spark, VALS).sort_async().get() == [-3, 1, 2, 4, 5]
-    assert Pipeline.from_slice(spark, VALS).sort_desc_async().get() == [5, 4, 2, 1, -3]
-    assert sorted(Pipeline.from_slice(spark, VALS).as_slice_async().get()) == sorted(VALS)
-    assert sorted(Pipeline.from_slice(spark, [1, 1, 2]).distinct_async().get()) == [1, 2]
-    assert Pipeline.from_slice(spark, [1, 1, 2]).distinct_count_async().get() == 2
-    assert Pipeline.from_slice(spark, VALS).reduce_async(lambda a, b: a + b).get() == 9
+    # every *_async terminal returns what its blocking twin returns on the
+    # same stage (asyncaggregate/asyncaggregate.go mirrors aggregate.go)
+    from pyspark.sql import functions as SF
+
+    from pippin_spark import Stage
+
+    vals = Pipeline.from_slice(spark, VALS)
+    dups = Pipeline.from_slice(spark, [1, 1, 2, 5, 5])
+    cplx = Pipeline.from_slice(spark, [(1.0, 2.0), (3.0, -4.0), (-1.0, 1.0)]).map(
+        lambda x: SF.struct(x["_1"].alias("re"), x["_2"].alias("im"))
+    )
+    pairs = Pipeline.from_slice(spark, [(1, 10), (1, 11), (2, 20)]).map(
+        lambda x: SF.struct(x["_1"].alias("key"), x["_2"].alias("value"))
+    )
+    seen = spark.sparkContext.accumulator(0)
+    cases = {
+        "sum": (vals, ()),
+        "sum_complex": (cplx, ()),
+        "avg": (vals, ()),
+        "avg_complex": (cplx, ()),
+        "max": (vals, ()),
+        "min": (vals, ()),
+        "count": (vals, ()),
+        "sort": (vals, ()),
+        "sort_desc": (vals, ()),
+        "reduce": (vals, (lambda a, b: a + b,)),
+        "as_slice": (dups, ()),
+        "as_map": (pairs, ()),
+        "as_multi_map": (pairs, ()),
+        "for_each": (vals, (seen.add,)),
+        "distinct": (dups, ()),
+        "distinct_count": (dups, ()),
+    }
+    public = [n for n in dir(Stage) if not n.startswith("_")]
+    assert sorted(n for n in public if n.endswith("_async")) == sorted(
+        [f"{n}_async" for n in cases] + ["group_by_async"]
+    )
+
+    def same(x):
+        if isinstance(x, list):
+            return sorted(x)
+        if isinstance(x, dict):
+            return {k: same(v) for k, v in x.items()}
+        return x
+
+    for name, (stage, args) in cases.items():
+        blocking = getattr(stage, name)(*args)
+        future = getattr(stage, f"{name}_async")(*args).get_with_timeout(120.0)
+        assert same(future) == same(blocking), name
+    assert seen.value == 2 * sum(VALS)
+    key = lambda x: SF.pmod(x, SF.lit(2))  # noqa: E731
+    assert dups.group_by_async(key).get_with_timeout(120.0) == dups.group_by(key).to_dict()
 
 
 def test_context_manager_close(spark):
@@ -191,21 +305,24 @@ def test_timeout_survives_concurrent_async_completion(spark):
     # disarm the pipeline timeout (the timer only dies when _active
     # drains to zero) — the slow action still gets cancelled.
     # The slow action sleeps JVM-side (reflect) so no Python workers
-    # are involved; sum() forces evaluation of the sleeping column.
+    # are involved; sum() forces evaluation of the sleeping column. The
+    # source is a range, not from_slice: over a local relation the
+    # optimizer runs the sleeping projection on the driver, with no job
+    # to cancel.
     from pyspark.sql import functions as SF
 
-    cfg = PipelineConfig(timeout=4.0)
-    s = Pipeline.from_slice(spark, VALS, config=cfg)
+    cfg = PipelineConfig(timeout=8.0)
+    s = Pipeline.from_dataframe(spark.range(0, 5, 1, 5), config=cfg)
     slow_fut = s.map(
         lambda c: SF.expr("reflect('java.lang.Thread','sleep', CAST(30000 AS BIGINT))")
     ).sum_async()
     time.sleep(0.3)
     quick = s.sum_async()
-    assert quick.get_with_timeout(60.0) == 9
+    assert quick.get_with_timeout(60.0) == 10
     assert s.pipeline.status is not Status.DONE
-    with pytest.raises((PipelineTimeoutError, PipelineInterruptedError)):
+    with pytest.raises(PipelineTimeoutError, match="context deadline exceeded"):
         slow_fut.get_with_timeout(25.0)
-    assert s.pipeline.status in (Status.TIMED_OUT, Status.INTERRUPTED)
+    assert s.pipeline.status is Status.TIMED_OUT
 
 
 def test_observation_metrics_ride_the_action(spark):
@@ -241,3 +358,43 @@ def test_helper_thread_jobs_keep_callers_job_group(spark):
     finally:
         sc.setJobGroup(None, None)  # type: ignore[arg-type]
     assert sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_executors_import_the_package_from_any_directory(tmp_path):
+    # UDFs ship pippin_spark's functions by value, so Python workers never
+    # import the package: a plain session (not get_spark's) in an
+    # application started in a foreign directory without PYTHONPATH still
+    # runs the dedup operators, whose UDFs name module-level functions
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "app.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        from pyspark.sql import SparkSession
+
+        from pippin_spark.operators.dedup import dedup_clusters, dedup_ngram_jaccard
+
+        spark = (SparkSession.builder.master("local[2]")
+                 .config("spark.sql.shuffle.partitions", "2").getOrCreate())
+        docs = spark.createDataFrame(
+            [(1, "the quick brown fox jumps over the lazy dog"),
+             (2, "the quick brown fox jumps over the lazy dog"),
+             (3, "an entirely different sentence about cats")],
+            "doc_id long, text string",
+        )
+        pairs = dedup_ngram_jaccard(docs, "text", "doc_id")
+        print(sorted(tuple(r) for r in dedup_clusters(pairs).collect()))
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == "[(1, 1), (2, 1)]"

@@ -269,23 +269,26 @@ def test_tws_running_agg_matches_batch(spark, sf_dir):
     assert got == exact
 
 
-def test_declared_streams_leave_no_temp_dirs(spark, sf_dir):
+def test_declared_streams_leave_no_temp_dirs(spark, sf_dir, tmp_path, monkeypatch):
     # memory sinks run on Spark's own temporary checkpoint and
     # foreachBatch sinks on a private directory removed after the
     # drain: repeated runs leave nothing under the temp dir. One warm
     # run first builds the shared persisted index the route query
-    # probes (a cache kept on purpose, not a leak)
+    # probes (a cache kept on purpose, not a leak). The temp dir is this
+    # test's own, so other processes writing to the system one cannot
+    # fail it
     import os
 
     from pippin_spark.entry_queries import ENTRY_QUERIES
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     names = ("streaming_dedup", "streaming_ivf_cell_route")
     for n in names:
         ENTRY_QUERIES[n](spark, sf_dir).collect()
 
     def pippin_entries():
         return {
-            e for e in os.listdir(tempfile.gettempdir()) if e.startswith("pippin_")
+            e for e in os.listdir(tmp_path) if e.startswith("pippin_")
         }
 
     before = pippin_entries()

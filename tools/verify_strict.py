@@ -101,11 +101,12 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
     import __spark_entry__ as entry
     from pyspark.sql import SparkSession
-
-    import os
 
     # VERIFY_MASTER / VERIFY_PARTITIONS mimic other harness layouts —
     # e.g. VERIFY_PARTITIONS=200 replicates the driver's PLAIN-session
