@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pippin_spark.functions import safe_cast, two_level_sums
 from pyspark.sql import types as T
 
-from pippin_spark.operators.util import bounded_collect, local_table
+from pippin_spark.operators.util import bounded_collect, local_table, scratch_dir
 from pippin_spark.pipeline import Pipeline
 
 ENTRY_QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -46,6 +46,25 @@ def _t(spark: SparkSession, sf_dir: str, name: str):
     """Table stage source (pipeline/pipeline.go:101-149 analog for
     parquet; SURVEY.md §2.1 extension)."""
     return Pipeline.from_table(spark, sf_dir, name)
+
+
+def _scratch(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """This process's path for one query's own files at one scale
+    factor: ``<scratch root>/<sf dir name>/<name>``."""
+    import os
+
+    return scratch_dir(spark, f"{os.path.basename(os.path.normpath(sf_dir))}/{name}")
+
+
+def _index_cache(spark: SparkSession, sf_dir: str, family: str, table: str) -> str:
+    """Where a persisted artifact family built from ``table`` is cached
+    (build-if-missing) for the rest of the process. The key holds the
+    table file's mtime, so a regenerated fixture never serves a stale
+    artifact."""
+    import os
+
+    mt = int(os.path.getmtime(os.path.join(sf_dir, f"{table}.parquet")))
+    return _scratch(spark, sf_dir, f"{family}_{mt}")
 
 
 def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -555,7 +574,7 @@ def q_source_from_csv(spark, sf_dir):
     # scale path; inference is an extra full pass). Comment column is
     # excluded: its free text is the one thing CSV quoting rules vary
     # on, and the source contract is about types + values, not escaping.
-    tmp = "/tmp/pippin_spark_csv_roundtrip"
+    tmp = _scratch(spark, sf_dir, "csv_roundtrip")
     base = _t(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -578,7 +597,7 @@ def q_source_from_json(spark, sf_dir):
     # JSON-lines source+sink round trip on a mixed-type table (ints,
     # strings with spaces/punctuation, a double) — Spark writes doubles
     # with round-trippable precision, so values hash-match the parquet
-    tmp = "/tmp/pippin_spark_json_roundtrip"
+    tmp = _scratch(spark, sf_dir, "json_roundtrip")
     base = _t(spark, sf_dir, "part")
     base.to_json(tmp)
     schema = T.StructType(
@@ -1426,17 +1445,6 @@ def q_ann_topk_ivf_kmeans(spark, sf_dir):
     return _recall_at_k(emb, q, ivf, 5)
 
 
-def _ann_index_path(sf_dir: str) -> str:
-    # deterministic per-fixture index location, keyed by the embeddings
-    # file's mtime so a driver-regenerated fixture can never serve a
-    # stale index (the manifest-diff idea applied to the index cache)
-    import os
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    mt = int(os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet")))
-    return f"/tmp/pippin_ann_ivf_{base}_{mt}"
-
-
 @_q(
     "ann_index_build",
     # build-once half of the prebuilt-IVF contract (VERDICT r7 #6:
@@ -1456,7 +1464,7 @@ def _ann_index_path(sf_dir: str) -> str:
 )
 def q_ann_index_build(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings").df
-    path = _ann_index_path(sf_dir)
+    path = _index_cache(spark, sf_dir, "ann_ivf", "embeddings")
     SIM.ann_index_write(
         emb, "embedding", "vec_id", path, num_cells=16, train_iters=3
     )
@@ -1473,7 +1481,7 @@ def _ivf_prebuilt_probe(spark, sf_dir, emb=None):
     import os
 
     emb = _t(spark, sf_dir, "embeddings").df if emb is None else emb
-    path = _ann_index_path(sf_dir)
+    path = _index_cache(spark, sf_dir, "ann_ivf", "embeddings")
     if not os.path.exists(f"{path}/assigned"):
         SIM.ann_index_write(
             emb, "embedding", "vec_id", path, num_cells=16, train_iters=3
@@ -1585,17 +1593,6 @@ def q_ann_topk_ivfpq_residual(spark, sf_dir):
     return _recall_at_k(emb, q, res, 5)
 
 
-def _ivfpq_index_path(sf_dir: str) -> str:
-    # the persisted IVF-PQ family (layout='cells' + pq codes); mtime-
-    # keyed like every index family so a regenerated fixture can never
-    # serve a stale index
-    import os
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    mt = int(os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet")))
-    return f"/tmp/pippin_ivfpq_{base}_{mt}"
-
-
 @_q(
     "ann_topk_ivfpq_prebuilt",
     # query-many half of the on-disk IVF-PQ: probe the PERSISTED index
@@ -1612,7 +1609,7 @@ def q_ann_topk_ivfpq_prebuilt(spark, sf_dir):
     import os
 
     emb = _t(spark, sf_dir, "embeddings").df
-    path = _ivfpq_index_path(sf_dir)
+    path = _index_cache(spark, sf_dir, "ivfpq", "embeddings")
     if not os.path.exists(f"{path}/assigned"):
         SIM.ann_index_write(
             emb, "embedding", "vec_id", path, num_cells=16, train_iters=2,
@@ -1623,18 +1620,6 @@ def q_ann_topk_ivfpq_prebuilt(spark, sf_dir):
         spark, path, q, "embedding", "vec_id", k=5, nprobe=8, overfetch=30
     )
     return _recall_at_k(emb, q, pre, 5)
-
-
-def _hn_index_path(sf_dir: str) -> str:
-    # like _ann_index_path but a separate index family: the
-    # hard-negative index persists the LABEL with each vector
-    # (extra_cols) and uses hard_negative_ivf's build parameters
-    # (4 cells, sample-trained Lloyd), not ann_index_build's 16
-    import os
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    mt = int(os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet")))
-    return f"/tmp/pippin_hn_ivf_{base}_{mt}"
 
 
 # ONE snapshot oracle shared by hard_negative_ivf AND its prebuilt
@@ -1668,7 +1653,10 @@ def _hn_prebuilt_probe(spark, sf_dir, emb=None):
     import os
 
     emb = _t(spark, sf_dir, "embeddings").df if emb is None else emb
-    path = _hn_index_path(sf_dir)
+    # its own family: the label rides with each vector and the build
+    # is hard_negative_ivf's (4 cells, sample-trained), not the 16 of
+    # ann_index_build
+    path = _index_cache(spark, sf_dir, "hn_ivf", "embeddings")
     if not os.path.exists(f"{path}/assigned"):
         SIM.ann_index_write(
             emb, "embedding", "vec_id", path, num_cells=4, train_iters=2,
@@ -3111,10 +3099,7 @@ def q_sink_partitioned_parquet(spark, sf_dir):
     # Readback groupBy on the partition key does partition pruning-
     # friendly listing; the oracle aggregates the source directly, so a
     # row lost or duplicated by the sink would hash-mismatch.
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/tmp/pippin_sink_{tag}/orders_by_priority"
+    path = _scratch(spark, sf_dir, "sink/orders_by_priority")
     _t(spark, sf_dir, "orders").to_parquet(path, partition_by=["o_orderpriority"])
     back = spark.read.parquet(path)
     return back.groupBy("o_orderpriority").agg(
@@ -3231,7 +3216,7 @@ def q_bucketed_join_pricing(spark, sf_dir):
                 tbl,
                 key,
                 num_buckets=8,
-                path=f"/tmp/pippin_bucketed_{tag}/{name}",
+                path=_scratch(spark, sf_dir, f"bucketed/{name}"),
             )
     j = REL.co_located_join(
         spark,
@@ -5163,10 +5148,13 @@ def q_length_bucketed_batches(spark, sf_dir):
     """,
 )
 def q_streaming_foreach_upsert(spark, sf_dir):
-    import tempfile
+    import shutil
 
     stream = _events_stream(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="pippin_fb_upsert_")
+    # the upsert decides "first batch" by looking at this directory, so
+    # a rerun must start from an empty one
+    out_dir = _scratch(spark, sf_dir, "fb_upsert")
+    shutil.rmtree(out_dir, ignore_errors=True)
 
     def upsert(batch_df, batch_id):
         latest = (
@@ -5212,7 +5200,7 @@ def q_streaming_foreach_upsert(spark, sf_dir):
         merged = merged.localCheckpoint(eager=True)
         merged.write.mode("overwrite").parquet(out_dir)
 
-    with _private_dir() as ckpt:
+    with _private_dir(spark) as ckpt:
         q = (
             stream.writeStream.foreachBatch(upsert)
             .trigger(availableNow=True)
@@ -5366,11 +5354,8 @@ def q_merge_intervals_events(spark, sf_dir):
 def q_source_from_text(spark, sf_dir):
     # raw text-line source+sink round trip: one string column on disk,
     # schema imposed by parsing (split) at read — the log-file shape.
-    # Per-run temp dir: a shared path races concurrent sessions (one
-    # overwrites while the other's lazy read scans it)
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="pippin_text_roundtrip_")
+    # The overwrite clears a previous run's lines
+    tmp = _scratch(spark, sf_dir, "text_roundtrip")
     docs = _t(spark, sf_dir, "documents").df
     docs.select(
         F.concat_ws("\t", F.col("doc_id").cast("string"), F.col("lang")).alias("value")
@@ -6126,10 +6111,7 @@ def q_q22_dormant_customers(spark, sf_dir):
     """,
 )
 def q_source_from_orc(spark, sf_dir):
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/tmp/pippin_orc_{tag}/lineitem"
+    path = _scratch(spark, sf_dir, "orc/lineitem")
     (
         _t(spark, sf_dir, "lineitem")
         .df.select("l_orderkey", "l_quantity", "l_returnflag")
@@ -6158,8 +6140,7 @@ def q_source_from_orc(spark, sf_dir):
 def q_source_binary_files(spark, sf_dir):
     import os
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = f"/tmp/pippin_binsrc_{tag}"
+    base = _scratch(spark, sf_dir, "binsrc")
     os.makedirs(base, exist_ok=True)
     rows = (
         _t(spark, sf_dir, "documents")
@@ -6591,10 +6572,7 @@ def q_window_percent_rank(spark, sf_dir):
     """,
 )
 def q_source_parquet_evolved(spark, sf_dir):
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = f"/tmp/pippin_evolve_{tag}"
+    base = _scratch(spark, sf_dir, "evolve")
     docs = _t(spark, sf_dir, "documents").df
     docs.select("doc_id", "lang").write.mode("overwrite").parquet(f"{base}/batch=1")
     docs.select("doc_id", "lang", "n_chars").write.mode("overwrite").parquet(
@@ -6623,10 +6601,7 @@ def q_source_parquet_evolved(spark, sf_dir):
     """,
 )
 def q_sink_csv_roundtrip(spark, sf_dir):
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/tmp/pippin_csv_{tag}/documents"
+    path = _scratch(spark, sf_dir, "csv/documents")
     docs = _t(spark, sf_dir, "documents").df.select("doc_id", "lang", "text")
     (
         docs.write.mode("overwrite")
@@ -6860,10 +6835,7 @@ def q_agg_argmax(spark, sf_dir):
     """,
 )
 def q_sink_sorted_parquet(spark, sf_dir):
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/tmp/pippin_sorted_{tag}/orders_by_price"
+    path = _scratch(spark, sf_dir, "sorted/orders_by_price")
     (
         _t(spark, sf_dir, "orders")
         .df.repartitionByRange(8, "o_totalprice")
@@ -6923,10 +6895,7 @@ def q_text_unicode_clean(spark, sf_dir):
     """,
 )
 def q_sink_jsonl_roundtrip(spark, sf_dir):
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/tmp/pippin_jsonl_{tag}/documents"
+    path = _scratch(spark, sf_dir, "jsonl/documents")
     docs = _t(spark, sf_dir, "documents").df.select("doc_id", "lang", "n_chars", "text")
     docs.write.mode("overwrite").json(path)
     back = spark.read.schema(
@@ -6951,10 +6920,7 @@ def q_sink_jsonl_roundtrip(spark, sf_dir):
     """,
 )
 def q_source_file_lineage(spark, sf_dir):
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/tmp/pippin_lineage_{tag}/orders"
+    path = _scratch(spark, sf_dir, "lineage/orders")
     _t(spark, sf_dir, "orders").df.write.mode("overwrite").partitionBy(
         "o_orderstatus"
     ).parquet(path)
@@ -6981,9 +6947,8 @@ def q_sink_compacted_parquet(spark, sf_dir):
     import math
     import os
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    fragged = f"/tmp/pippin_compact_{tag}/fragged"
-    compact = f"/tmp/pippin_compact_{tag}/compact"
+    fragged = _scratch(spark, sf_dir, "compact/fragged")
+    compact = _scratch(spark, sf_dir, "compact/compact")
     docs = _t(spark, sf_dir, "documents").df.select("doc_id", "lang", "text")
     docs.repartition(64).write.mode("overwrite").parquet(fragged)
     total_bytes = sum(
@@ -7058,10 +7023,7 @@ def q_sql_query_api(spark, sf_dir):
     """,
 )
 def q_source_json_corrupt(spark, sf_dir):
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/tmp/pippin_corrupt_{tag}/feed"
+    path = _scratch(spark, sf_dir, "corrupt/feed")
     docs = _t(spark, sf_dir, "documents").df.select("doc_id", "lang")
     docs.write.mode("overwrite").json(path)
     with open(f"{path}/zz_corrupt.json", "w") as f:
@@ -7846,17 +7808,6 @@ def q_bpe_encode_docs(spark, sf_dir):
     return BPE.bpe_doc_piece_counts(docs, "text", rounds=3)
 
 
-def _bpe_merges_path(sf_dir: str) -> str:
-    # deterministic per-fixture tokenizer-artifact location, keyed by
-    # the documents file's mtime (the _ann_index_path pattern) so a
-    # driver-regenerated fixture can never serve stale merges
-    import os
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    mt = int(os.path.getmtime(os.path.join(sf_dir, "documents.parquet")))
-    return f"/tmp/pippin_bpe_merges_{base}_{mt}"
-
-
 @_q(
     "bpe_encode_prebuilt",
     # query-many half of the tokenizer artifact contract (the
@@ -7877,7 +7828,7 @@ def q_bpe_encode_prebuilt(spark, sf_dir):
     from pippin_spark.operators import bpe as BPE
 
     docs = _t(spark, sf_dir, "documents").df
-    path = _bpe_merges_path(sf_dir)
+    path = _index_cache(spark, sf_dir, "bpe_merges", "documents")
     if not os.path.exists(path):
         BPE.bpe_write_merges(docs, path, "text", rounds=3)
     return BPE.bpe_doc_piece_counts_prebuilt(spark, path, docs, "text")
@@ -9076,10 +9027,7 @@ def q_variant_props_stats(spark, sf_dir):
     """,
 )
 def q_source_from_xml(spark, sf_dir):
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/tmp/pippin_xml_{tag}/documents"
+    path = _scratch(spark, sf_dir, "xml/documents")
     docs = _t(spark, sf_dir, "documents").df.select("doc_id", "lang", "n_chars", "text")
     (
         docs.write.mode("overwrite")
@@ -9347,15 +9295,16 @@ def q_catalog_ctas(spark, sf_dir):
 
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     table = f"pippin_ctas_{tag}"
+    location = _scratch(spark, sf_dir, "ctas")
     _t(spark, sf_dir, "orders").df.createOrReplaceTempView("orders_src")
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     # DROP on an EXTERNAL table removes only catalog metadata; CTAS
     # refuses a non-empty LOCATION, so clear the prior run's files
-    shutil.rmtree(f"/tmp/pippin_ctas_{tag}", ignore_errors=True)
+    shutil.rmtree(location, ignore_errors=True)
     spark.sql(
         f"""
         CREATE TABLE {table}
-        USING PARQUET LOCATION '/tmp/pippin_ctas_{tag}'
+        USING PARQUET LOCATION '{location}'
         AS SELECT o_orderpriority,
                   COUNT(*) AS n,
                   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
@@ -10181,8 +10130,7 @@ def q_for_each_sink_roundtrip(spark, sf_dir):
     import os
     import shutil
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/tmp/pippin_foreach_{tag}"
+    path = _scratch(spark, sf_dir, "foreach")
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
 
@@ -11061,10 +11009,7 @@ def q_corpus_manifest_diff(spark, sf_dir):
     """,
 )
 def q_source_orc_roundtrip(spark, sf_dir):
-    import os
-
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    path = f"/tmp/pippin_orc_{tag}/orders"
+    path = _scratch(spark, sf_dir, "orc/orders")
     (
         _t(spark, sf_dir, "orders")
         .df.select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -11969,7 +11914,7 @@ def q_streaming_ivf_cell_route(spark, sf_dir):
     import os
 
     emb = _t(spark, sf_dir, "embeddings").df
-    path = _ann_index_path(sf_dir)
+    path = _index_cache(spark, sf_dir, "ann_ivf", "embeddings")
     if not os.path.exists(f"{path}/assigned"):
         SIM.ann_index_write(
             emb, "embedding", "vec_id", path, num_cells=16, train_iters=3
@@ -12018,14 +11963,17 @@ def q_streaming_ivf_cell_route(spark, sf_dir):
 
 
 @contextmanager
-def _private_dir():
-    """A fresh directory for one invocation's index artifacts or stream
-    checkpoint, removed on exit: concurrent or repeated runs never
-    share a path, and a rerun never appends to a previous run's index."""
+def _private_dir(spark):
+    """A fresh directory under the scratch root for one invocation's
+    index artifacts or stream checkpoint, removed on exit: concurrent
+    or repeated runs never share a path, and a rerun never appends to
+    a previous run's index."""
+    import os
     import shutil
-    import tempfile
+    import uuid
 
-    path = tempfile.mkdtemp(prefix="pippin_private_")
+    path = scratch_dir(spark, f"private_{uuid.uuid4().hex}")
+    os.makedirs(path)
     try:
         yield path
     finally:
@@ -12194,7 +12142,7 @@ def _maintain_cycle(spark, sf_dir):
     hot-cell compaction, both rebuild gates, both probes — in a
     run-private index. Returns the gate outcomes and probe sizes."""
     emb, base, qdf = _maint_frames(spark, sf_dir)
-    with _private_dir() as d:
+    with _private_dir(spark) as d:
         path = f"{d}/maintained"
         SIM.ann_index_write(base, "embedding", "vec_id", path, **_MAINT_INDEX)
         _maint_stream_append(spark, sf_dir, emb, path)
@@ -12251,7 +12199,7 @@ def _maintain_cycle(spark, sf_dir):
 def q_ann_index_maintain_e2e(spark, sf_dir):
     # _maintain_cycle's steps with the verification between them
     emb, base, qdf = _maint_frames(spark, sf_dir)
-    with _private_dir() as d:
+    with _private_dir(spark) as d:
         path = f"{d}/maintained"
         SIM.ann_index_write(base, "embedding", "vec_id", path, **_MAINT_INDEX)
         pre = _cell_file_sizes(path)
@@ -12418,7 +12366,7 @@ def _retrain_cycle(spark, sf_dir):
     append, both probes — in a run-private index. Returns the gate
     outcomes and probe sizes."""
     base, post, qdf = _retrain_frames(spark, sf_dir)
-    with _private_dir() as d:
+    with _private_dir(spark) as d:
         path = f"{d}/maintained"
         SIM.ann_index_write(
             base, "embedding", "vec_id", path, **_RETRAIN_INDEX
@@ -12481,7 +12429,7 @@ def _retrain_cycle(spark, sf_dir):
 def q_ann_index_retrain_e2e(spark, sf_dir):
     # _retrain_cycle's steps with the verification between them
     base, post, qdf = _retrain_frames(spark, sf_dir)
-    with _private_dir() as d:
+    with _private_dir(spark) as d:
         path = f"{d}/maintained"
         SIM.ann_index_write(
             base, "embedding", "vec_id", path, **_RETRAIN_INDEX

@@ -16,7 +16,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pippin_spark.operators.util import bounded_collect, local_table
+from pippin_spark.operators.util import bounded_collect, local_table, scratch_dir
 
 # Row bound under which exact_kth_2pass selects on one bounded collect
 # (a few MB of scalars) instead of the two histogram passes; above it
@@ -77,22 +77,8 @@ def _ranged_ided(df: DataFrame, order_by, num_partitions: Optional[int]):
     return ranged, ided
 
 
-# table-barrier temp dirs created without a CacheHandle: deleted at
-# interpreter exit so repeated bench/verify runs don't accumulate
-# orphan parquet dirs under /tmp
-_BARRIER_DIRS: list = []
-
-
-def _cleanup_barrier_dirs() -> None:
-    import shutil
-
-    for p in _BARRIER_DIRS:
-        shutil.rmtree(p, ignore_errors=True)
-    _BARRIER_DIRS.clear()
-
-
 def _table_barrier(df: DataFrame, caches=None) -> DataFrame:
-    """Materialize ``df`` to a temp parquet table and return a scan of
+    """Materialize ``df`` to a parquet table and return a scan of
     it — an evaluation-stability barrier BY CONSTRUCTION: every
     downstream consumer reads the same committed files, so no cache
     eviction, AQE re-partitioning, or branch re-evaluation can ever
@@ -102,36 +88,17 @@ def _table_barrier(df: DataFrame, caches=None) -> DataFrame:
     by tests/test_relational_barrier.py — but 'deterministic recompute'
     is an argument, a written table is a guarantee).
 
-    The barrier location must be visible to every executor AND the
-    driver. On a real cluster the driver's /tmp is NOT (executors
-    would resolve a driver-local path against the default FS), so the
-    dir is derived from ``spark.pippin.scratchDir`` when set — point
-    it at a shared filesystem (HDFS/S3A/NFS) path; a unique subdir is
-    created per barrier. Unset, it falls back to a driver-local
-    tempfile.mkdtemp(), which is correct ONLY in local mode (the test
-    and bench environment). Cleanup is best-effort rmtree of local
-    paths; remote scratch dirs are uniquely named and left to the
-    scratch location's retention policy (ADVICE r9).
-
-    The temp dir is registered on ``caches`` (a CacheHandle) when
-    given, else deleted at interpreter exit."""
-    import tempfile
+    The table is a uniquely named directory under ``scratch_dir``, so
+    the driver and every executor must see that root: on a cluster set
+    ``spark.pippin.scratchDir`` to a shared filesystem (HDFS/S3A/NFS)
+    path. It is registered on ``caches`` (a CacheHandle) when given
+    and deleted on release; otherwise it goes with the scratch root."""
     import uuid
 
-    scratch = df.sparkSession.conf.get("spark.pippin.scratchDir", None)
-    if scratch:
-        path = scratch.rstrip("/") + "/pippin_rank_barrier_" + uuid.uuid4().hex
-    else:
-        path = tempfile.mkdtemp(prefix="pippin_rank_barrier_")
+    path = scratch_dir(df.sparkSession, f"rank_barrier_{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(path)
     if caches is not None:
         caches.register_path(path)
-    else:
-        if not _BARRIER_DIRS:
-            import atexit
-
-            atexit.register(_cleanup_barrier_dirs)
-        _BARRIER_DIRS.append(path)
     return df.sparkSession.read.parquet(path)
 
 
@@ -188,9 +155,9 @@ def ranked_sort(
     sf0.1 as per-group constant rank shifts; the pre-r8 exchange-reuse
     shape did NOT pin it under AQE cached-plan re-partitioning). For
     multi-consumer or eviction-exposed callers, pass
-    ``barrier='table'``: the id'd frame is written to a temp parquet
-    table and every branch scans the SAME committed files —
-    evaluation-stable by construction, no persist()/recompute
+    ``barrier='table'``: the id'd frame is written to a parquet table
+    under ``scratch_dir`` and every branch scans the SAME committed
+    files — evaluation-stable by construction, no persist()/recompute
     assumption at all (this is also the 100 TB shape: a corpus-sized
     cache WILL evict, a written table cannot). Recompute determinism
     of the default path (explicit partition count + deterministic
@@ -198,7 +165,7 @@ def ranked_sort(
     unpersist) is pinned by tests/test_relational_barrier.py.
 
     barrier: 'persist' (default — MEMORY_AND_DISK cache of the id'd
-        frame), 'table' (temp parquet materialization, see above), or
+        frame), 'table' (parquet materialization, see above), or
         'checkpoint' (eager localCheckpoint: executor-block-backed,
         lineage truncated; lost blocks FAIL the job rather than
         silently recompute).
@@ -207,8 +174,10 @@ def ranked_sort(
         terminal action (otherwise it lives until LRU eviction /
         clearCache — heavy callers invoked repeatedly in one session
         each leak one full-input materialization). With 'table' the
-        temp dir is registered for deletion; without a handle it is
-        removed at interpreter exit.
+        barrier directory under ``scratch_dir`` is registered for
+        deletion on release; without a handle it lives as long as the
+        scratch root (until interpreter exit, or for good under
+        ``spark.pippin.scratchDir``).
     """
     ranged, ided = _ranged_ided(df, order_by, num_partitions)
     # The counts branch MUST observe the exact same partition indexing

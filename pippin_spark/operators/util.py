@@ -56,9 +56,10 @@ class CacheHandle:
 
     def register_path(self, path: str) -> str:
         """Register an on-disk materialization (ranked_sort's
-        ``barrier='table'`` temp parquet) for deletion on release —
-        the disk analog of :meth:`register`. The caller must be done
-        reading every plan that scans the path before releasing."""
+        ``barrier='table'`` parquet under scratch_dir) for deletion on
+        release rather than with the scratch root — the disk analog of
+        :meth:`register`. The caller must be done reading every plan
+        that scans the path before releasing."""
         if self._released:
             raise ValueError("CacheHandle already released")
         self._paths.append(path)
@@ -86,6 +87,39 @@ class CacheHandle:
 
     def __exit__(self, *exc) -> None:
         self.release()
+
+
+_SCRATCH_ROOTS: dict = {}
+_SCRATCH_LOCK = threading.Lock()
+
+
+def scratch_dir(spark, name: str) -> str:
+    """``<root>/<name>``: the one place pippin puts the files it writes
+    for itself (round-trip sinks, index caches, barriers, stream
+    checkpoints). The path is not created; callers write into it.
+
+    The root is made once per process, so concurrent processes never
+    share a path. With ``spark.pippin.scratchDir`` set (a filesystem
+    every executor and the driver see — HDFS/S3A/NFS on a cluster) it
+    is a uniquely named directory under that path, which pippin never
+    removes. Unset, it is one driver-local ``mkdtemp`` (correct only in
+    local mode), removed when the interpreter exits."""
+    import atexit
+    import shutil
+    import tempfile
+    import uuid
+
+    conf = spark.conf.get("spark.pippin.scratchDir", None)
+    with _SCRATCH_LOCK:
+        root = _SCRATCH_ROOTS.get(conf)
+        if root is None:
+            if conf:
+                root = f"{conf.rstrip('/')}/pippin_{uuid.uuid4().hex}"
+            else:
+                root = tempfile.mkdtemp(prefix="pippin_")
+                atexit.register(shutil.rmtree, root, True)
+            _SCRATCH_ROOTS[conf] = root
+    return f"{root}/{name}"
 
 
 def _ddl_field_names(ddl: str) -> List[str]:

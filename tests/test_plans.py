@@ -384,11 +384,10 @@ def test_partition_pruning_on_hive_sink(spark, qs):
     # a filter on the partition column of a hive-partitioned table
     # must prune at PLANNING time (PartitionFilters on the scan), not
     # read-and-discard — the 100 TB contract of partitioned layouts
-    qs["sink_partitioned_parquet"](spark, SF)  # materializes the sink
-    import os
+    from pippin_spark.entry_queries import _scratch
 
-    tag = os.path.basename(SF.rstrip("/"))
-    path = f"/tmp/pippin_sink_{tag}/orders_by_priority"
+    qs["sink_partitioned_parquet"](spark, SF)  # materializes the sink
+    path = _scratch(spark, SF, "sink/orders_by_priority")
     back = spark.read.parquet(path).filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
@@ -397,14 +396,11 @@ def test_partition_pruning_on_hive_sink(spark, qs):
     assert m is not None and "o_orderpriority" in m.group(1)
 
 
-def test_dynamic_partition_pruning_kicks_in(spark):
+def test_dynamic_partition_pruning_kicks_in(spark, tmp_path):
     # joining a partitioned fact with a filtered dim must inject a
     # dynamicpruning subquery on the fact scan: only the partitions
     # the dim filter selects are read at runtime
-    import os
-
-    tag = os.path.basename(SF.rstrip("/"))
-    path = f"/tmp/pippin_dpp_{tag}/orders_by_status"
+    path = str(tmp_path / "orders_by_status")
     orders = spark.read.parquet(f"{SF}/orders.parquet")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     fact = spark.read.parquet(path)

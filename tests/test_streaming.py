@@ -269,27 +269,26 @@ def test_tws_running_agg_matches_batch(spark, sf_dir):
     assert got == exact
 
 
-def test_declared_streams_leave_no_temp_dirs(spark, sf_dir, tmp_path, monkeypatch):
+def test_declared_streams_leave_no_temp_dirs(spark, sf_dir):
     # memory sinks run on Spark's own temporary checkpoint and
     # foreachBatch sinks on a private directory removed after the
-    # drain: repeated runs leave nothing under the temp dir. One warm
-    # run first builds the shared persisted index the route query
-    # probes (a cache kept on purpose, not a leak). The temp dir is this
-    # test's own, so other processes writing to the system one cannot
-    # fail it
+    # drain: repeated runs leave nothing under the process's scratch
+    # root. One warm run first builds the persisted index the route
+    # query probes (a cache kept for the process, not a leak). The root
+    # is this process's own, so other processes cannot fail it
     import os
 
     from pippin_spark.entry_queries import ENTRY_QUERIES
+    from pippin_spark.operators.util import scratch_dir
 
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    names = ("streaming_dedup", "streaming_ivf_cell_route")
+    root = os.path.dirname(scratch_dir(spark, "x"))
+    names = ("streaming_dedup", "streaming_ivf_cell_route",
+             "streaming_foreach_upsert")
     for n in names:
         ENTRY_QUERIES[n](spark, sf_dir).collect()
 
     def pippin_entries():
-        return {
-            e for e in os.listdir(tmp_path) if e.startswith("pippin_")
-        }
+        return set(os.listdir(root))
 
     before = pippin_entries()
     for _ in range(2):

@@ -194,9 +194,9 @@ def main() -> None:
         n = emb.count()
         cells = max(4, n // 500)
         base = os.path.basename(os.path.normpath(d))
-        # keyed on the embeddings-file mtime like _hn_index_path, so a
-        # regenerated replica dir under the same name can never serve
-        # a stale index built from old data (ADVICE r8)
+        # kept across runs on purpose (a 100x build is slow), keyed on
+        # the embeddings-file mtime so a regenerated replica dir under
+        # the same name can never serve a stale index (ADVICE r8)
         mt = int(os.path.getmtime(f"{d}/embeddings.parquet"))
         path = f"/tmp/pippin_hn_scale_{base}_{cells}_{mt}"
         if not os.path.exists(f"{path}/assigned"):
