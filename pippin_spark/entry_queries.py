@@ -1596,10 +1596,12 @@ def q_ann_topk_ivfpq_residual(spark, sf_dir):
 @_q(
     "ann_topk_ivfpq_prebuilt",
     # query-many half of the on-disk IVF-PQ: probe the PERSISTED index
-    # (build-if-missing, then pure reads) — the candidate scan reads
-    # ONLY (id, codes) from the probed cells' DIRECTORIES
-    # (PartitionFilters + ReadSchema, both plan-gated); raw vectors
-    # are fetched just for the survivors' exact re-rank. Codes
+    # (build-if-missing, then pure reads). Probed cells this small are
+    # read on the driver (the driver-local probe); past its byte guard
+    # the Spark candidate scan reads ONLY (id, codes) from the probed
+    # cells' DIRECTORIES (PartitionFilters + ReadSchema, both
+    # plan-gated with the guard forced); raw vectors serve just the
+    # survivors' exact re-rank on either path. Codes
     # round-trip parquet losslessly, so recall pins to the SAME
     # literals as the fresh path (exact equality pytest-pinned) —
     # shared snapshot constant, the _HN_SNAPSHOT pattern.

@@ -25,9 +25,11 @@ from pyspark.sql import functions as F
 
 from pippin_spark.operators.dedup import cosine_similarity
 from pippin_spark.operators.util import (
+    arrow_conversion,
     bounded_collect,
     ensure_parallelism,
     local_table,
+    sidecar_parquet_read,
     sidecar_parquet_rows,
     sidecar_parquet_write,
 )
@@ -477,6 +479,26 @@ def _assign_cells(
 # (~0.2-0.3 s scheduling floor each, over data this small) collapse
 # to a single action. Data-sized, not core-count-sized.
 _KMEANS_LOCAL_MAX = 65_536
+
+# The prebuilt probes' driver-local guard, in scanned bytes: each probed
+# cell's file bytes (os.scandir, zero jobs) counted once per query that
+# probes the cell, which is what the driver's per-query kernels cost. At
+# most this many, a cells-layout probe reads the probed cells with
+# pyarrow and prunes them on the driver; past it the probe scans in
+# Spark. Set at the lowest crossover measured, local vs Spark on
+# local[4] (4-vCPU VM), 64-d cells indexes of 2,000-1,000,000 vectors,
+# 1-1,024 queries, k=10. The IVF-PQ probe decides it: its local side
+# reads every probed row's cv, so it won everywhere below 512 MiB
+# scanned (389 MiB by one query: 2.6 s vs 3.6 s; 501 MiB by 64: 0.66 s
+# vs 1.29 s) and lost by 5 % at 516 MiB (2.51 s vs 2.40 s, five queries
+# over 293 MiB of cells); over small cells it broke even near 1,000 MiB
+# (1.24 s vs 1.27 s, 256 queries). The IVF probe's local side won at
+# every point measured, up to 2,500 MiB (3.3 s vs 30.6 s).
+_PROBE_LOCAL_MAX_BYTES = 512 << 20
+
+# Query rows one ADC scan serves (the query_chunk default), and the most
+# queries a driver-local probe takes.
+_QUERY_CHUNK = 1024
 
 # Row cap of the deterministic training sample every sample-trained
 # model pulls to the driver (_collect_sample): bounded driver memory
@@ -1263,14 +1285,43 @@ def ivf_topk_prebuilt(
     nprobe: int = 4,
 ) -> DataFrame:
     """Query-many half of the prebuilt-IVF contract: probe a persisted
-    index without touching the corpus or retraining — centroid scoring
-    is a #queries×C broadcast cross join, and the candidate scan reads
-    only the probed cells' row groups (prune_cells). Output shape and
-    values are EXACTLY ivf_topk's for the same build parameters."""
-    centroids, assigned = ann_index_read(spark, path)
+    index without touching the corpus or retraining. One of two paths
+    runs:
+
+    - **Driver-local** (_ivf_local), for a ``layout='cells'`` index that
+      os.path can see: one bounded collect of at most _QUERY_CHUNK
+      queries with distinct integer ids, each query's ``nprobe`` cells
+      chosen on the driver (_probed_cells; the Spark path folds the same
+      cosine in the JVM, so only cells whose cosines tie to within
+      rounding can order differently), and — when the probed scan (each
+      probed cell's bytes once per query probing it) is at most
+      _PROBE_LOCAL_MAX_BYTES — a pyarrow read of the probed files one
+      at a time. Each batch is pruned to every query's top
+      ``k + 8`` by the rounded-6 numpy cosine (NaN first, as Spark's
+      ``cosine DESC``; the 8 extra absorb matmul-vs-fold divergence,
+      the knn_join_blocked ``overfetch`` contract), and the survivors'
+      exact re-rank runs in the JVM (_rank_by_cosine).
+    - **Spark** (_ivf_probe), for everything else — a flat layout, a URI
+      path (``file:``, ``hdfs:``), an oversize probe, more queries, or
+      an empty query set: centroid scoring is a #queries×C broadcast
+      cross join, and the candidate scan reads only the probed cells'
+      row groups or directories (prune_cells).
+
+    Both paths return the same rows and schema (pytest-pinned with the
+    guard forced each way). Output shape and values are EXACTLY
+    ivf_topk's for the same build parameters."""
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     )
+    # centroid sidecar: driver pyarrow read, zero Spark jobs, one read
+    # for either path
+    centroids = sidecar_parquet_read(f"{path}/centroids")
+    local = _ivf_local(spark, path, centroids, q, k, nprobe)
+    if local is not None:
+        return local
+    with arrow_conversion(spark):
+        centroids = spark.createDataFrame(centroids)
+    assigned = spark.read.parquet(f"{path}/assigned")
     return _ivf_probe(centroids, assigned, q, k, nprobe, prune_cells=True)
 
 
@@ -1445,7 +1496,9 @@ def _check_retrain_complete(path: str) -> None:
     (deterministic, converges; see its crash contract)."""
     import os
 
-    if os.path.exists(f"{path}/retrain_inflight"):
+    from pippin_spark.operators.util import local_fs_path
+
+    if os.path.exists(f"{local_fs_path(path) or path}/retrain_inflight"):
         raise RuntimeError(
             f"{path}: retrain_inflight marker present — a codebook "
             "retrain crashed between committing the new codebooks and "
@@ -2779,7 +2832,7 @@ def pq_topk(
     train_iters: int = 2,
     train_mod: int = 1,
     overfetch: int = 8,
-    query_chunk: int = 1024,
+    query_chunk: int = _QUERY_CHUNK,
     max_queries: int = 262144,
 ) -> DataFrame:
     """Approximate cosine top-k via product quantization with
@@ -2822,9 +2875,10 @@ def pq_topk(
     c = corpus.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("cv")
     )
+    rows = _query_rows("pq_topk", queries, vec_col, id_col, max_queries)
     return _adc_topk(
-        "pq_topk", queries, vec_col, id_col, books, k, overfetch,
-        query_chunk, max_queries, scan=c, rerank=c,
+        corpus.sparkSession, rows, books, k, overfetch, query_chunk,
+        scan=c, rerank=c,
     )
 
 
@@ -2840,7 +2894,7 @@ def ivfpq_topk(
     codebook_k: int = 16,
     train_iters: int = 2,
     overfetch: int = 8,
-    query_chunk: int = 1024,
+    query_chunk: int = _QUERY_CHUNK,
     max_queries: int = 262144,
     by_residual: bool = False,
 ) -> DataFrame:
@@ -2895,10 +2949,10 @@ def ivfpq_topk(
     rerank = corpus.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("cv")
     )
+    rows = _query_rows("ivfpq_topk", queries, vec_col, id_col, max_queries)
     return _adc_topk(
-        "ivfpq_topk", queries, vec_col, id_col, books, k, overfetch,
-        query_chunk, max_queries, scan=assigned, rerank=rerank,
-        ivf=(cell_ids, Cn, nprobe, by_residual),
+        corpus.sparkSession, rows, books, k, overfetch, query_chunk,
+        scan=assigned, rerank=rerank, ivf=(cell_ids, Cn, nprobe, by_residual),
     )
 
 
@@ -2911,34 +2965,55 @@ def ivfpq_topk_prebuilt(
     k: int = 5,
     nprobe: int = 4,
     overfetch: int = 8,
-    query_chunk: int = 1024,
+    query_chunk: int = _QUERY_CHUNK,
     max_queries: int = 262144,
 ) -> DataFrame:
     """Probe a PERSISTED IVF-PQ index (ann_index_write with
     ``pq=(m, k, iters)``): the query-many half of the full FAISS-style
-    on-disk shape. The candidate scan reads ONLY (id, codes, cell) —
-    column pruning keeps the raw vectors out of the scan entirely
-    (plan-gated via ReadSchema), the probed-cell IN-literal prunes row
-    groups (flat layout) or whole directories (cells layout), and the
-    ADC uses the codes AS STORED — no per-query re-encode, no Lloyd,
-    no codebook retrain. Raw vectors are read back only for the
-    ~|Q|·(k+overfetch) survivors' exact cosine re-rank.
+    on-disk shape. The ADC uses the codes AS STORED — no per-query
+    re-encode, no Lloyd, no codebook retrain — and raw vectors serve
+    only the ~|Q|·(k+overfetch) survivors' exact cosine re-rank. The
+    queries come to the driver in one bounded collect, and each query's
+    ``nprobe`` cells are chosen there (_probed_cells). Then one of two
+    paths runs:
 
-    At 100 TB this is the operating point the composition exists for:
-    the hot scan touches m bytes per row of a directory-pruned subset,
-    the full-width vectors are touched survivor-count times. Output
-    values are EXACTLY ivfpq_topk's for the same build parameters
-    (codes round-trip parquet losslessly; pytest-pinned)."""
+    - **Driver-local** (_adc_local), for a ``layout='cells'`` index that
+      os.path can see, at most ``query_chunk`` queries with distinct ids,
+      and a probed scan (each probed cell's bytes once per query probing
+      it) of at most _PROBE_LOCAL_MAX_BYTES: pyarrow reads the probed
+      ``assigned/cell=N/`` files one at a time, the ADC batch kernel
+      (_adc_batch) prunes each batch to every query's top
+      ``k + overfetch``, and the survivors' exact re-rank runs in the
+      JVM as on the Spark path. Plain and residual codebooks both.
+    - **Spark** (_adc_topk), for everything else — a flat layout, a URI
+      path (``file:``, ``hdfs:``), an oversize probe, more queries, or
+      an empty query set: the candidate scan reads ONLY (id, codes,
+      cell) — column pruning keeps the raw vectors out of the scan
+      (plan-gated via ReadSchema) — and the probed-cell IN-literal
+      prunes row groups (flat layout) or whole directories (cells
+      layout).
+
+    Both paths return the same rows and schema (pytest-pinned with the
+    guard forced each way); a ``retrain_inflight`` marker raises on
+    both. Output values are EXACTLY ivfpq_topk's for the same build
+    parameters (codes round-trip parquet losslessly; pytest-pinned)."""
     books, residual = _read_codebooks(spark, path)
-    assigned = spark.read.parquet(f"{path}/assigned")
     # centroid sidecar: driver pyarrow read, zero Spark jobs
     cell_ids, Cn = _normalized_centroid_matrix(
         sidecar_parquet_rows(f"{path}/centroids")
     )
+    ivf = (cell_ids, Cn, nprobe, residual)
+    rows = _query_rows(
+        "ivfpq_topk_prebuilt", queries, vec_col, id_col, max_queries
+    )
+    local = _adc_local(
+        spark, path, rows, books, k, int(k + overfetch), query_chunk, ivf
+    )
+    if local is not None:
+        return local
     return _adc_topk(
-        "ivfpq_topk_prebuilt", queries, vec_col, id_col, books, k,
-        overfetch, query_chunk, max_queries, scan=assigned,
-        ivf=(cell_ids, Cn, nprobe, residual),
+        spark, rows, books, k, overfetch, query_chunk,
+        scan=spark.read.parquet(f"{path}/assigned"), ivf=ivf,
     )
 
 
@@ -2947,28 +3022,9 @@ def ivfpq_topk_prebuilt(
 _RESIDUAL_CHUNK = 128
 
 
-def _adc_topk(
-    op: str, queries, vec_col, id_col, books, k: int, overfetch: int,
-    query_chunk: int, max_queries: int, scan, rerank=None, ivf=None,
-) -> DataFrame:
-    """The query loop of the three ADC operators. The queries come to
-    the driver in one bounded collect (``op`` raises past
-    ``max_queries``) and are probed in ``query_chunk`` slices, one
-    _adc_chunk each; the chunk frames are unioned, and an empty query
-    set gives the empty contract-schema frame. Every chunk frame keeps
-    its tables closure until the union runs, so chunking bounds each
-    scan task's closure, not the driver's peak.
-
-    ``scan``: the ADC scan input, (id, cv) or (id, codes) plus ``cell``
-    with ``ivf``. ``rerank``: the (id, cv) frame the survivors' exact
-    re-rank reads; None reads it from the chunk's cell-filtered scan.
-    ``ivf=(cell_ids, Cn, nprobe, residual)`` probes each query's
-    ``nprobe`` nearest cells (filtering the scan to their union);
-    residual tables cap the chunk at _RESIDUAL_CHUNK queries."""
-    import functools
-
-    import numpy as np
-
+def _query_rows(op: str, queries, vec_col, id_col, max_queries: int):
+    """The ADC operators' query side on the driver: (query_id, qv) rows
+    from one bounded collect; ``op`` raises past ``max_queries``."""
     rows = bounded_collect(
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -2982,15 +3038,45 @@ def _adc_topk(
             "the ANN-probe operator — for corpus-sized query sets use "
             "knn_join_ivf / knn_join_blocked"
         )
+    return rows
+
+
+def _query_matrix(rows):
+    """(query ids int64, query matrix float64) of collected (query_id, qv)
+    rows."""
+    import numpy as np
+
+    q_ids = np.array([r["query_id"] for r in rows], dtype=np.int64)
+    Q = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in rows])
+    return q_ids, Q
+
+
+def _adc_topk(
+    spark, rows, books, k: int, overfetch: int, query_chunk: int, scan,
+    rerank=None, ivf=None,
+) -> DataFrame:
+    """The Spark query loop of the three ADC operators. ``rows`` are the
+    collected queries (_query_rows), probed in ``query_chunk`` slices,
+    one _adc_chunk each; the chunk frames are unioned, and an empty query
+    set gives the empty contract-schema frame. Every chunk frame keeps
+    its tables closure until the union runs, so chunking bounds each
+    scan task's closure, not the driver's peak.
+
+    ``scan``: the ADC scan input, (id, cv) or (id, codes) plus ``cell``
+    with ``ivf``. ``rerank``: the (id, cv) frame the survivors' exact
+    re-rank reads; None reads it from the chunk's cell-filtered scan.
+    ``ivf=(cell_ids, Cn, nprobe, residual)`` probes each query's
+    ``nprobe`` nearest cells (filtering the scan to their union);
+    residual tables cap the chunk at _RESIDUAL_CHUNK queries."""
+    import functools
+
     cell_ids, Cn, nprobe, residual = ivf or (None, None, 0, False)
     if residual:
         query_chunk = min(query_chunk, _RESIDUAL_CHUNK)
     nk = int(k + overfetch)
     parts = []
     for lo in range(0, len(rows), query_chunk):
-        chunk = rows[lo : lo + query_chunk]
-        q_ids = np.array([r["query_id"] for r in chunk], dtype=np.int64)
-        Q = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in chunk])
+        q_ids, Q = _query_matrix(rows[lo : lo + query_chunk])
         if ivf is None:
             parts.append(_adc_chunk(scan, rerank, q_ids, Q, books, k, nk))
             continue
@@ -3004,7 +3090,7 @@ def _adc_topk(
         )
     if not parts:
         return local_table(
-            queries.sparkSession, [],
+            spark, [],
             "query_id long, neighbor_id long, cosine double, rank int",
         )
     return functools.reduce(DataFrame.unionByName, parts)
@@ -3012,47 +3098,36 @@ def _adc_topk(
 
 def _probed_cells(Q, cell_ids, Cn, nprobe: int):
     """Each query's ``nprobe`` nearest cells as centroid-row indices
-    (|Q|, nprobe), ties to the LOWEST cell id (the _ivf_probe order:
-    cosine desc, cell asc), and the sorted union of their cell ids."""
+    (|Q|, nprobe), in the _ivf_probe order: cosine desc with NaN first
+    (Spark's ``cosine DESC``), ties to the LOWEST cell id; and the
+    sorted union of their cell ids."""
     import numpy as np
 
     qn = np.linalg.norm(Q, axis=1)
     qn[qn == 0.0] = 1.0
     sims = (Q / qn[:, None]) @ Cn.T
-    order = np.lexsort((cell_ids[None, :].repeat(len(Q), 0), -sims))
+    key = np.where(np.isnan(sims), -np.inf, -sims)
+    order = np.lexsort((cell_ids[None, :].repeat(len(Q), 0), key))
     probe_cols = order[:, :nprobe]
     return probe_cols, sorted(int(cell_ids[j]) for j in set(probe_cols.ravel()))
 
 
-def _adc_chunk(scan, rerank, q_ids, Q, books, k: int, nk: int, cells=None):
-    """One query chunk of the ADC probe: an ADC scan of ``scan`` that
-    keeps each batch's top ``nk`` per query by (adc, id) ascending, the
-    global top ``nk`` survivors by the same order, and the exact cosine
-    re-rank (_rank_by_cosine) of the survivors' (id, cv) from ``rerank``.
-
-    ``scan`` holds (id, codes) — stored codes, scanned as they are, so
-    the scan never reads cv — or (id, cv), encoded by _pq_encoder in the
-    same Arrow pass; plus ``cell`` when ``cells`` is given.
-    ``cells=(cell_ids, probe_cols, resid)``: a row counts for query qi
-    only when its cell is among ``probe_cols[qi]`` (see _probed_cells);
-    ``resid`` (the normalized centroid matrix) switches the encode and
-    the query tables to the residual space, one table per (query,
-    probed cell). Without ``cells`` every row counts: one cell that
-    every query probes."""
+def _adc_tables(Q, books, probe_cols, n_cells: int, resid=None):
+    """The ADC query side: (tables, slot). slot[qi, cell position] says
+    which of query qi's tables scores that cell (−1: not probed; one
+    table per query, or one per probed cell with ``resid``).
+    tables[qi, j, s, c] = ||R[qi, j, s] − books[s, c]||², R the unit
+    query, minus the probed cell's normalized centroid (a row of
+    ``resid``) in the residual space. ADC approximates ||q_n − v||²
+    (constant ||q||² terms included — rank-equivalent); on unit vectors
+    L2² = 2 − 2·cos."""
     import numpy as np
 
     m, _, d = books.shape
     norms = np.linalg.norm(Q, axis=1)
     norms[norms == 0.0] = 1.0
     Qn = Q / norms[:, None]
-    cell_ids, probe_cols, resid = cells or (
-        None, np.zeros((len(Q), 1), dtype=np.int64), None
-    )
-    # slot[qi, cell position]: which of query qi's tables scores that
-    # cell (−1 = not probed)
-    slot = -np.ones(
-        (len(Q), 1 if cell_ids is None else len(cell_ids)), dtype=np.int16
-    )
+    slot = -np.ones((len(Q), n_cells), dtype=np.int16)
     if resid is None:
         slot[np.arange(len(Q))[:, None], probe_cols] = 0
         R = Qn.reshape(len(Q), 1, m, d)
@@ -3061,10 +3136,61 @@ def _adc_chunk(scan, rerank, q_ids, Q, books, k: int, nk: int, cells=None):
             probe_cols.shape[1]
         )
         R = (Qn[:, None, :] - resid[probe_cols]).reshape(len(Q), -1, m, d)
-    # tables[qi, j, s, c] = ||R[qi, j, s] − books[s, c]||²: ADC
-    # approximates ||q_n − v||² (constant ||q||² terms included —
-    # rank-equivalent); on unit vectors L2² = 2 − 2·cos
-    tables = ((R[..., None, :] - books) ** 2).sum(axis=-1)
+    return ((R[..., None, :] - books) ** 2).sum(axis=-1), slot
+
+
+def _adc_batch(ids, cpos, codes, q_ids, tables, slot, nk: int):
+    """The ADC scan kernel over one batch of index rows, run by the Arrow
+    scan (_adc_chunk) and by the driver-local probe (_adc_local). Query
+    qi counts a row when the row's cell position ``cpos`` has one of its
+    tables (slot[qi, cpos] ≥ 0) and the row is not the query itself;
+    the row scores the rounded-9 sum of its ``codes`` looked up in that
+    table, and each query keeps the batch's top ``nk`` by (adc, id)
+    ascending. Returns (query positions, batch rows, adc)."""
+    import numpy as np
+
+    srange = np.arange(codes.shape[1])
+    out_q, out_r, out_a = [], [], []
+    for qi in range(len(q_ids)):
+        slots = slot[qi, cpos]
+        rows = np.nonzero((ids != q_ids[qi]) & (slots >= 0))[0]
+        if len(rows) == 0:
+            continue
+        adc = np.round(
+            tables[qi][slots[rows][:, None], srange, codes[rows]].sum(axis=1),
+            9,
+        )
+        order = np.lexsort((ids[rows], adc))[:nk]
+        out_q.append(np.full(len(order), qi))
+        out_r.append(rows[order])
+        out_a.append(adc[order])
+    if not out_q:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+    return np.concatenate(out_q), np.concatenate(out_r), np.concatenate(out_a)
+
+
+def _adc_chunk(scan, rerank, q_ids, Q, books, k: int, nk: int, cells=None):
+    """One query chunk of the Spark ADC probe: an Arrow scan of ``scan``
+    running _adc_batch on every batch, the global top ``nk`` survivors
+    per query by the same (adc, id) order, and the exact cosine re-rank
+    (_rank_by_cosine) of the survivors' (id, cv) from ``rerank``.
+
+    ``scan`` holds (id, codes) — stored codes, scanned as they are, so
+    the scan never reads cv — or (id, cv), encoded by _pq_encoder in the
+    same Arrow pass; plus ``cell`` when ``cells`` is given.
+    ``cells=(cell_ids, probe_cols, resid)``: a row counts for query qi
+    only when its cell is among ``probe_cols[qi]`` (see _probed_cells);
+    ``resid`` (the normalized centroid matrix) switches the encode and
+    the query tables to the residual space (_adc_tables). Without
+    ``cells`` every row counts: one cell that every query probes."""
+    import numpy as np
+
+    cell_ids, probe_cols, resid = cells or (
+        None, np.zeros((len(Q), 1), dtype=np.int64), None
+    )
+    tables, slot = _adc_tables(
+        Q, books, probe_cols, 1 if cell_ids is None else len(cell_ids), resid
+    )
     stored = "codes" in scan.columns
     encode = _pq_encoder(books)
 
@@ -3072,7 +3198,6 @@ def _adc_chunk(scan, rerank, q_ids, Q, books, k: int, nk: int, cells=None):
         import numpy as _np
         import pandas as _pd
 
-        srange = _np.arange(m)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -3088,32 +3213,10 @@ def _adc_chunk(scan, rerank, q_ids, Q, books, k: int, nk: int, cells=None):
                     _np.stack(pdf["cv"].to_numpy()).astype(_np.float64),
                     None if resid is None else resid[cpos],
                 )
-            out_q, out_n, out_a = [], [], []
-            for qi in range(len(q_ids)):
-                slots = slot[qi, cpos]
-                mask = (ids != q_ids[qi]) & (slots >= 0)
-                cand_ids = ids[mask]
-                top = min(nk, len(cand_ids))
-                if top == 0:
-                    continue
-                cand_adc = _np.round(
-                    tables[qi][slots[mask][:, None], srange, codes[mask]].sum(
-                        axis=1
-                    ),
-                    9,
-                )
-                # exact batch top-`top` by (adc asc, id asc)
-                order = _np.lexsort((cand_ids, cand_adc))[:top]
-                out_q.append(_np.full(top, q_ids[qi]))
-                out_n.append(cand_ids[order])
-                out_a.append(cand_adc[order])
-            if out_q:
+            qi, rows, adc_ = _adc_batch(ids, cpos, codes, q_ids, tables, slot, nk)
+            if len(qi):
                 yield _pd.DataFrame(
-                    {
-                        "query_id": _np.concatenate(out_q),
-                        "neighbor_id": _np.concatenate(out_n),
-                        "adc": _np.concatenate(out_a),
-                    }
+                    {"query_id": q_ids[qi], "neighbor_id": ids[rows], "adc": adc_}
                 )
 
     cols = ["id", "codes" if stored else "cv"] + ([] if cells is None else ["cell"])
@@ -3139,6 +3242,235 @@ def _adc_chunk(scan, rerank, q_ids, Q, books, k: int, nk: int, cells=None):
             "neighbor_id",
         ).join(F.broadcast(qdf), "query_id"),
         k,
+    )
+
+
+def _cells_root(path: str):
+    """``{path}/assigned`` when it is a ``layout='cells'`` index that
+    os.path can see (``cell=N`` directories), else None: a flat layout,
+    or a URI (``file:``, ``hdfs:``) only Spark's reader resolves."""
+    import os
+
+    root = os.path.join(path, "assigned")
+    try:
+        with os.scandir(root) as it:
+            cells = any(e.name.startswith("cell=") and e.is_dir() for e in it)
+    except OSError:
+        return None
+    return root if cells else None
+
+
+def _local_probe_plan(root, rows, max_queries: int, cell_ids, Cn, nprobe):
+    """Steps 1 and 2 of a driver-local probe: (q_ids, Q, probe_cols,
+    files), or None when the probe takes the Spark path instead: no
+    queries, more than ``max_queries``, a null query id or vector, a
+    vector whose length is not the centroids', a repeated query id,
+    probed cells with no files, or a scan over _PROBE_LOCAL_MAX_BYTES:
+    each probed file's bytes counted once per query that probes its
+    cell, the work the driver's per-query kernels do.
+    ``files`` are the probed cells' (cell, path) data files under
+    ``root`` (_cells_root), hidden ``.``/``_`` files skipped as Spark's
+    reader skips them; sizes come from os.scandir, zero jobs. Parked
+    directories (``assigned_old/``) are outside ``root``, so never
+    read."""
+    import os
+
+    import numpy as np
+
+    if not rows or len(rows) > max_queries:
+        return None
+    dim = Cn.shape[1]
+    if any(
+        r["query_id"] is None or r["qv"] is None or len(r["qv"]) != dim
+        for r in rows
+    ):
+        return None
+    q_ids, Q = _query_matrix(rows)
+    if len(set(q_ids.tolist())) < len(q_ids):
+        return None
+    probe_cols, cells = _probed_cells(Q, cell_ids, Cn, nprobe)
+    probers = np.bincount(probe_cols.ravel(), minlength=len(cell_ids))
+    files, scan = [], 0
+    for c in cells:
+        try:
+            with os.scandir(os.path.join(root, f"cell={c}")) as it:
+                entries = [e for e in it if e.name[0] not in "._" and e.is_file()]
+        except FileNotFoundError:  # no vector was assigned to the cell
+            continue
+        for e in sorted(entries, key=lambda e: e.name):
+            scan += e.stat().st_size * int(probers[np.searchsorted(cell_ids, c)])
+            files.append((c, e.path))
+    if not files or scan > _PROBE_LOCAL_MAX_BYTES:
+        return None
+    return q_ids, Q, probe_cols, files
+
+
+def _top_per_query(qpos, key, nid, nk: int):
+    """Positions of each query's first ``nk`` entries by (key, nid)
+    ascending — the survivor rule of the Spark path's per-query window
+    (NaN keys sort last, as in Spark)."""
+    import numpy as np
+
+    order = np.lexsort((nid, key, qpos))
+    grouped = qpos[order]
+    first = np.searchsorted(grouped, grouped, side="left")
+    return order[np.arange(len(order)) - first < nk]
+
+
+def _list_matrix(col):
+    """A pyarrow list column of equal-length lists as a 2-D numpy array
+    (null elements of a float list read as NaN)."""
+    return col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), -1)
+
+
+def _local_rerank(spark, files, cols, q_ids, qv, q_field, id_type, k, nk, batch_top):
+    """Steps 3 and 4 of a driver-local probe. Reads (id, cv, *``cols``)
+    from the probed ``files`` one file at a time (pyarrow
+    ``iter_batches``), takes ``batch_top(cell, ids, batch)`` → (query
+    positions, batch rows, key) per batch, and keeps each query's top
+    ``nk`` by (key, id) ascending. The survivors' (query_id,
+    neighbor_id, qv, cv) become one local relation that _rank_by_cosine
+    re-ranks in the JVM, so the final cosine and rank keep their one
+    definition. ``qv``: one list<double> per query, as the Spark path
+    builds it; cv is taken as stored (null elements stay null).
+    ``q_field``: the query_id field; ``id_type``: neighbor_id's Arrow
+    type, None to keep the stored one."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    vec = pa.list_(pa.float64())
+    batch_rows = max(64, (1 << 21) // max(len(qv), len(qv[0])))
+    qpos, nid, key = np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+    cv = pa.array([], vec)
+    for cell, f in files:
+        pf = papq.ParquetFile(f)
+        if id_type is None:
+            id_type = pf.schema_arrow.field("id").type
+        for b in pf.iter_batches(batch_size=batch_rows, columns=["id", "cv", *cols]):
+            ids = b.column("id").to_numpy()
+            bq, rows, bkey = batch_top(cell, ids, b)
+            keep = _top_per_query(bq, bkey, ids[rows], nk)
+            rows = rows[keep]
+            qpos = np.concatenate([qpos, bq[keep]])
+            nid = np.concatenate([nid, ids[rows]])
+            key = np.concatenate([key, bkey[keep]])
+            cv = pa.concat_arrays([cv, b.column("cv").take(rows).cast(vec)])
+            top = _top_per_query(qpos, key, nid, nk)
+            qpos, nid, key, cv = qpos[top], nid[top], key[top], cv.take(top)
+    table = pa.table(
+        [
+            pa.array(q_ids[qpos]).cast(q_field.type),
+            pa.array(nid).cast(id_type),
+            qv.take(qpos),
+            cv,
+        ],
+        schema=pa.schema([
+            q_field, pa.field("neighbor_id", id_type), ("qv", vec), ("cv", vec),
+        ]),
+    )
+    with arrow_conversion(spark):
+        pairs = spark.createDataFrame(table)
+    return _rank_by_cosine(pairs.coalesce(1), k)
+
+
+def _adc_local(spark, path: str, rows, books, k: int, nk: int, max_queries, ivf):
+    """The driver-local IVF-PQ probe (see ivfpq_topk_prebuilt), or None
+    when it takes the Spark path (_cells_root, _local_probe_plan): the
+    probed cells' stored codes run through _adc_batch, and the survivors
+    of the Spark path's window rule (_top_per_query) are re-ranked by
+    _local_rerank. Output types are the Spark path's: query_id and
+    neighbor_id long."""
+    import numpy as np
+    import pyarrow as pa
+
+    root = _cells_root(path)
+    if root is None:
+        return None
+    cell_ids, Cn, nprobe, residual = ivf
+    plan = _local_probe_plan(root, rows, max_queries, cell_ids, Cn, nprobe)
+    if not plan:
+        return None
+    q_ids, Q, probe_cols, files = plan
+    tables, slot = _adc_tables(
+        Q, books, probe_cols, len(cell_ids), Cn if residual else None
+    )
+
+    def batch_top(cell, ids, batch):
+        codes = _list_matrix(batch.column("codes")).astype(np.int64)
+        cpos = np.full(len(ids), np.searchsorted(cell_ids, cell))
+        return _adc_batch(ids, cpos, codes, q_ids, tables, slot, nk)
+
+    # qv as the Spark path's query table (local_table) holds it: a NaN
+    # element reads back as null
+    qv = pa.array([list(v) for v in Q], pa.list_(pa.float64()), from_pandas=True)
+    return _local_rerank(
+        spark, files, ["codes"], q_ids, qv, pa.field("query_id", pa.int64()),
+        pa.int64(), k, nk, batch_top,
+    )
+
+
+def _ivf_local(spark, path: str, centroids, q, k: int, nprobe: int):
+    """The driver-local IVF probe (see ivf_topk_prebuilt), or None when
+    it takes the Spark path. ``centroids``: the sidecar's Arrow table.
+    The layout (and an integer query id type) is checked before the
+    query collect, so a flat index spends no job on it; a fallback past
+    that check has spent one bounded collect of the queries. Each probed
+    cell's batch scores its probing queries by the cosine_similarity
+    rule in numpy (d / (|q|·|v|), 0.0 for a zero norm, NaN through)
+    rounded to 6; survivors are re-ranked by _local_rerank. query_id
+    keeps the queries' id type and nullability, neighbor_id the stored
+    one.
+
+    The numpy pre-prune is a second statement of the cosine, kept for
+    cost: handing all the probed rows to _ivf_probe as a local relation
+    instead (one cosine definition, no pre-prune) ran 5 jobs and 23
+    tasks per IVF probe against 1 and 1, and doubled the traced
+    ann_maintain op_p50_ms (652 -> 1340 ms, seed 90001, 4-vCPU VM)."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import IntegralType
+
+    nk = k + 8  # knn_join_blocked's default overfetch
+    field = q.schema["query_id"]
+    root = _cells_root(path)
+    if root is None or not isinstance(field.dataType, IntegralType):
+        return None
+    cell_ids, Cn = _normalized_centroid_matrix(centroids.to_pylist())
+    rows = bounded_collect(q, _QUERY_CHUNK)
+    plan = _local_probe_plan(root, rows, _QUERY_CHUNK, cell_ids, Cn, nprobe)
+    if not plan:
+        return None
+    q_ids, Q, probe_cols, files = plan
+    probes = np.zeros((len(Q), len(cell_ids)), dtype=bool)
+    probes[np.arange(len(Q))[:, None], probe_cols] = True
+    qv = pa.array([r["qv"] for r in rows], pa.list_(pa.float64()))
+    qnorm = np.linalg.norm(Q, axis=1)
+    q_null = np.array([any(x is None for x in r["qv"]) for r in rows])
+
+    def batch_top(cell, ids, batch):
+        qsel = np.nonzero(probes[:, np.searchsorted(cell_ids, cell)])[0]
+        col = batch.column("cv")
+        V = _list_matrix(col)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            n = qnorm[qsel, None] * np.linalg.norm(V, axis=1)[None, :]
+            cos = np.where((n > 0) | np.isnan(n), (Q[qsel] @ V.T) / n, 0.0)
+        # a null element nulls the JVM fold, whose guard then gives 0.0
+        cos[q_null[qsel]] = 0.0
+        flat = col.flatten()
+        if flat.null_count:
+            nulls = flat.is_null().to_numpy(zero_copy_only=False)
+            cos[:, nulls.reshape(len(col), -1).any(axis=1)] = 0.0
+        cos = np.round(cos, 6)
+        key = np.where(np.isnan(cos), -np.inf, -cos)
+        pos, hit = np.nonzero(ids[None, :] != q_ids[qsel, None])
+        return qsel[pos], hit, key[pos, hit]
+
+    return _local_rerank(
+        spark, files, [], q_ids, qv,
+        pa.field("query_id", to_arrow_type(field.dataType), field.nullable),
+        None, k, nk, batch_top,
     )
 
 

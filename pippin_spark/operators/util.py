@@ -222,6 +222,21 @@ def sidecar_parquet_write(dir_path: str, table, mode: str = "overwrite") -> None
         raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
 
 
+def local_fs_path(path: str) -> Optional[str]:
+    """``path`` on the local filesystem: ``path`` itself when it has no
+    URI scheme, the decoded path of a ``file:`` URI (Spark's form for a
+    local path), else None — ``hdfs:``, ``s3a:`` and the like resolve
+    only through Spark's reader."""
+    from urllib.parse import unquote, urlparse
+
+    u = urlparse(path)
+    if not u.scheme:
+        return path
+    if u.scheme == "file" and u.netloc in ("", "localhost"):
+        return unquote(u.path)
+    return None
+
+
 def sidecar_parquet_read(dir_path: str):
     """Driver-side read of a driver-sized parquet sidecar directory —
     the read half of sidecar_parquet_write (guide §1.2: a KB-scale
@@ -233,14 +248,16 @@ def sidecar_parquet_read(dir_path: str):
     sorts rows by key or controls its own fold order. Values are
     bit-identical to a Spark read (float64/int64/bool/utf8/
     list<double> round-trip parquet exactly). Raises FileNotFoundError
-    on a missing/empty dir — as loud as Spark's PATH_NOT_FOUND."""
+    on a missing/empty dir — as loud as Spark's PATH_NOT_FOUND — and on
+    a URI other than ``file:`` (local_fs_path)."""
     import glob
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as papq
 
-    files = sorted(glob.glob(os.path.join(dir_path, "*.parquet")))
+    local = local_fs_path(dir_path)
+    files = sorted(glob.glob(os.path.join(local, "*.parquet"))) if local else []
     if not files:
         raise FileNotFoundError(f"no parquet files in sidecar {dir_path}")
     return pa.concat_tables([papq.read_table(f) for f in files], promote_options="default")

@@ -840,14 +840,16 @@ def test_sft_render_multiturn_zero_shuffle(spark, qs):
     assert "Window" not in p
 
 
-def test_maintained_index_probe_prunes_partitions(spark, tmp_path):
+def test_maintained_index_probe_prunes_partitions(spark, tmp_path, monkeypatch):
     # the layout='cells' (maintained) index is partitioned BY cell, so
-    # the probe's IN-literal prunes whole DIRECTORIES at planning time:
-    # the scan's PartitionFilters must carry cell IN (...) and the
-    # partition count read must be < the total cell count
+    # the Spark probe's IN-literal prunes whole DIRECTORIES at planning
+    # time: the scan's PartitionFilters must carry cell IN (...) and the
+    # partition count read must be < the total cell count. A probe this
+    # small runs driver-local; the byte guard at 0 forces the Spark path
     from pippin_spark.entry_queries import _t
     from pippin_spark.operators import similarity as SIM
 
+    monkeypatch.setattr(SIM, "_PROBE_LOCAL_MAX_BYTES", 0)
     emb = _t(spark, SF, "embeddings").df
     path = str(tmp_path / "maintained")
     SIM.ann_index_write(
@@ -863,11 +865,16 @@ def test_maintained_index_probe_prunes_partitions(spark, tmp_path):
     assert any("cell" in f and "IN" in f.upper() for f in part), part[:4]
 
 
-def test_ivfpq_prebuilt_scan_reads_codes_not_vectors(spark, qs):
-    # the on-disk IVF-PQ point: the candidate scan's projection is
+def test_ivfpq_prebuilt_scan_reads_codes_not_vectors(spark, qs, monkeypatch):
+    # the on-disk IVF-PQ point: the Spark candidate scan's projection is
     # (id, codes) — the raw vector column must NOT be in the ADC
     # scan's ReadSchema (it is read back only for survivors), and the
-    # probed-cell IN prunes partitions of the cells-layout index
+    # probed-cell IN prunes partitions of the cells-layout index. A
+    # probe this small runs driver-local; the byte guard at 0 forces
+    # the Spark path
+    from pippin_spark.operators import similarity as SIM
+
+    monkeypatch.setattr(SIM, "_PROBE_LOCAL_MAX_BYTES", 0)
     df = qs["ann_topk_ivfpq_prebuilt"](spark, SF)
     p = plan(df)
     reads = re.findall(r"ReadSchema: [^\n]*", p)
